@@ -1921,19 +1921,22 @@ def sim_cosine_neardup(spark, sf_dir):
        WHERE cum >= ceil(0.5 * tot)""",
 )
 def multiplex_one_pass(spark, sf_dir):
-    """N heterogeneous queries in ONE scan + ONE shuffle via mergeable
-    partials (the reference's FilterStreaming multiplexing across every
-    aggregation type, FilterStreaming.scala:54-67 + :124 ``getData``
-    partials, without the per-batch driver re-broadcast): three counting
-    filters + an exact COUNT DISTINCT (key-set partials) + a mergeable
-    linear-histogram QUANTILE (bucket-count partials, est = bucket
-    midpoint — engine-portable, so the oracle reproduces it exactly)."""
-    from bullet_spark_spark.operators.multiplex import multiplex_partials
+    """N heterogeneous queries in ONE scan + ONE routed aggregation on the
+    engine's serving path (the reference's FilterStreaming multiplexing
+    across every aggregation type, FilterStreaming.scala:54-67 + :124
+    ``getData`` partials): three counting filters + an exact COUNT
+    DISTINCT (key-set partials) + a mergeable linear-histogram QUANTILE
+    (bucket-count partials, est = bucket midpoint — engine-portable, so
+    the oracle reproduces it exactly). The five specs register on a
+    ``DynamicMultiplexer`` and the table runs through it as one
+    micro-batch, so the oracle certifies the live path's routing, partial
+    merge and finalize code."""
     from bullet_spark_spark.plans import CountDistinctAgg as _CD
     from bullet_spark_spark.plans import DistributionAgg as _DA
     from bullet_spark_spark.plans import DistributionType as _DT
     from bullet_spark_spark.plans import GroupAgg as _GA
     from bullet_spark_spark.plans import Query as _Q
+    from bullet_spark_spark.streaming.dynamic import DynamicMultiplexer
 
     t = _t(spark, sf_dir)
     specs = {
@@ -1957,55 +1960,19 @@ def multiplex_one_pass(spark, sf_dir):
             ),
         ),
     }
-    partials = multiplex_partials(t["events"], specs)
+    mux = DynamicMultiplexer(spark)
+    for qid, spec in specs.items():
+        mux.register(qid, spec)
+    mux.process_batch(t["events"], 0)
 
-    # finalize in ONE second aggregation over the (result-sized) partials —
-    # no per-family re-filtering, so the base table is scanned exactly once
-    final = partials.groupBy("query_id").agg(
-        F.sum("count_").alias("__sum"),
-        F.count(
-            F.when(~F.exists(F.map_values("keys"), lambda v: v.isNull()), 1)
-        ).alias("__nkeys"),
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    F.col("keys")["__bucket"].isNotNull(),
-                    F.struct(
-                        F.col("keys")["__bucket"].cast("long").alias("b"),
-                        F.col("count_").alias("c"),
-                    ),
-                )
-            )
-        ).alias("__bl"),
+    def _n(handle):
+        rows = handle.result()
+        v = rows[0][-1] if rows else 0  # global COUNT with no matched row
+        return None if v is None else float(v)
+
+    return spark.createDataFrame(
+        [(qid, _n(h)) for qid, h in mux.queries.items()], "query_id string, n double"
     )
-    total = F.aggregate("__bl", F.lit(0).cast("long"), lambda acc, x: acc + x["c"])
-    rank = F.greatest(F.ceil(F.lit(0.5) * total), F.lit(1))
-    p50_est = F.aggregate(
-        "__bl",
-        F.struct(
-            F.lit(0).cast("long").alias("run"),
-            F.lit(None).cast("double").alias("est"),
-        ),
-        lambda acc, x: F.struct(
-            (acc["run"] + x["c"]).alias("run"),
-            F.coalesce(
-                acc["est"],
-                F.when(
-                    acc["run"] + x["c"] >= rank, (x["b"] + F.lit(0.5)) * F.lit(5.0)
-                ),
-            ).alias("est"),
-        ),
-        lambda acc: acc["est"],
-    )
-    n = (
-        F.when(
-            F.col("query_id").isin("q_hi", "q_purchase", "q_teens"),
-            F.col("__sum").cast("double"),
-        )
-        .when(F.col("query_id") == "q_cd", F.col("__nkeys").cast("double"))
-        .otherwise(p50_est)
-    )
-    return final.select("query_id", n.alias("n"))
 
 
 @q(
@@ -9182,11 +9149,15 @@ def _supplier_co_edges(t):
     # requirement (sorted by (ok, s) ⇒ sorted by ok), so the join adds
     # no exchange and no sort — vs distinct()'s (ok, s) exchange PLUS
     # the join's ok exchange + sort. Output verified identical
-    # (exceptAll both ways = 0; null s cannot occur in lineitem).
+    # (exceptAll both ways = 0). NULL s rows drop BEFORE the window: the
+    # lag test below would keep every one of them (its previous value is
+    # NULL too), and a NULL s never forms an edge under a.s < b.s, so
+    # dropping them is exact.
     w_dedup = W.partitionBy("ok").orderBy("s")
     sl = (
         t["lineitem"]
         .select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s"))
+        .filter(F.col("s").isNotNull())
         .withColumn("__p", F.lag("s").over(w_dedup))
         .filter(F.col("__p").isNull() | (F.col("__p") != F.col("s")))
         .drop("__p")

@@ -436,6 +436,14 @@ def _bucketed_running_sums(
     cast_preserves_order = isinstance(
         dtype, (NumericType, DateType, TimestampType)
     )
+    # DATE / TIMESTAMP do not cast to double: bucket them by their
+    # order-preserving integer encodings (days / microseconds since epoch)
+    if isinstance(dtype, DateType):
+        order_num = F.unix_date(F.col(order_col)).cast("double")
+    elif isinstance(dtype, TimestampType):
+        order_num = F.unix_micros(F.col(order_col)).cast("double")
+    else:
+        order_num = F.col(order_col).cast("double")
     try:
         # inside the try: a non-numeric conf value (e.g. "auto" under some
         # AQE configurations) degrades to the safe global-window fallback
@@ -451,7 +459,7 @@ def _bucketed_running_sums(
     if probs:
         bounds_df = frame.agg(
             F.percentile_approx(
-                F.col(order_col).cast("double"),
+                order_num,
                 F.array(*[F.lit(p) for p in probs]),
                 F.lit(10000),
             ).alias("__bounds")
@@ -465,7 +473,7 @@ def _bucketed_running_sums(
             F.col("__bounds"), F.array().cast("array<double>")
         )
         bkt = F.size(
-            F.filter(barr, lambda bb: F.col(order_col).cast("double") > bb)
+            F.filter(barr, lambda bb: order_num > bb)
         )
         # scalar-subquery attachment, NOT a crossJoin: Spark's size-only
         # join estimation MULTIPLIES child sizeInBytes, so joining even a

@@ -263,7 +263,7 @@ class _Parser:
             return ("COUNT_FIELD", f)
         if name == "APPROX_COUNT_DISTINCT":
             # Spark SQL's function name; compiles to the HLL-sketch CD,
-            # which both shared-stage multiplexers carry as blob partials
+            # which the shared-scan multiplexer carries as blob partials
             fields = self._field_name_list()
             self.expect_op(")")
             return ("COUNT_DISTINCT_APPROX", fields)

@@ -106,11 +106,12 @@ class DistributionAgg:
     # global sort and no O(rows) buffer, and the fastest exact path at any
     # volume (operators.distribution.exact_quantiles_histogram)
     histogram: bool = False
-    # mergeable-state bucketing for the multiplexer / sketch path: QUANTILE
-    # partials are per-bucket counts with LINEAR buckets floor(value/width)
-    # (operators.sketch.hist_group_sketches semantics — engine-portable,
-    # estimates within one width of exact). Required when a QUANTILE spec
-    # goes through register_multiplexed; ignored elsewhere.
+    # mergeable-state bucketing for the dynamic multiplexer / sketch path:
+    # QUANTILE partials are per-bucket counts with LINEAR buckets
+    # floor(value/width) (operators.sketch.hist_group_sketches semantics —
+    # engine-portable, estimates within one width of exact). Required when a
+    # QUANTILE spec registers on streaming.dynamic.DynamicMultiplexer;
+    # ignored elsewhere.
     width: float | None = None
 
 

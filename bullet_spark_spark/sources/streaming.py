@@ -104,20 +104,11 @@ def file_drip(
     )
 
 
-def rate_source(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Built-in rate source: (timestamp, value) — handy for soak tests."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )
-
-
 def decode_json(df: DataFrame, schema: StructType, col: str = "value") -> DataFrame:
     """The deserialize+convert stage (ref DSLDataProducer.scala:25-30:
     ``map(deserialize).map(convert)``) as a single typed projection —
-    JSON text column → flattened typed columns. Used by the socket/kafka
-    sources; works identically on batch and streaming frames."""
+    JSON text column → flattened typed columns; works identically on batch
+    and streaming frames."""
     return df.select(F.from_json(F.col(col), schema).alias("r")).select("r.*")
 
 
@@ -155,63 +146,6 @@ def union_sources(dfs: list[DataFrame]) -> DataFrame:
     for df in dfs[1:]:
         out = out.unionByName(df)
     return out
-
-
-def json_socket_source(
-    spark: SparkSession, host: str, port: int, schema: StructType
-) -> DataFrame:
-    """Socket lines of JSON → typed columns (the DSL deserializer/converter
-    path as a projection)."""
-    raw = spark.readStream.format("socket").option("host", host).option("port", port).load()
-    return decode_json(raw, schema)
-
-
-def kafka_json_source(
-    spark: SparkSession, bootstrap: str, topic: str, schema: StructType
-) -> DataFrame:
-    """Kafka JSON source (production path; requires the kafka connector jar
-    on the cluster — not exercised in this container)."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topic)
-        .load()
-    )
-    return decode_json(raw.withColumn("value", F.col("value").cast("string")), schema)
-
-
-def kafka_avro_source(
-    spark: SparkSession, bootstrap: str, topic: str, avro_schema_json: str
-) -> DataFrame:
-    """Kafka Avro source: the reference's DSL Avro stack
-    (BulletSparkKryoRegistrator.scala:15 LazyBulletAvro; avro dep
-    pom.xml:130-134) as kafka → ``decode_avro`` (sources.avro — spark-avro
-    connector when loaded, Arrow-batched Python codec otherwise)."""
-    from bullet_spark_spark.sources.avro import decode_avro
-
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topic)
-        .load()
-        .select("value")
-    )
-    return decode_avro(raw, avro_schema_json)
-
-
-def pulsar_json_source(
-    spark: SparkSession, service_url: str, topic: str, schema: StructType
-) -> DataFrame:
-    """Pulsar source (the reference's second DSL connector, pom.xml:62-63).
-    Requires the pulsar-spark connector jar on the cluster (absent here);
-    the decode stage is the same typed projection as kafka's."""
-    raw = (
-        spark.readStream.format("pulsar")
-        .option("service.url", service_url)
-        .option("topics", topic)
-        .load()
-    )
-    return decode_json(raw.withColumn("value", F.col("value").cast("string")), schema)
 
 
 def stream_stream_interval_join(

@@ -25,9 +25,11 @@ as a leak we must not copy).
 
 Scale posture: N queries = N concurrent StreamingQuery handles sharing the
 scheduler; the state store is per-query and keyed by its own group-by keys,
-so state volume is output-cardinality, not input-cardinality. A
-broadcast-predicate multiplexer (single pass for very high query counts) is
-the documented follow-up, per the Structured Streaming SIGMOD'18 design.
+so state volume is output-cardinality, not input-cardinality. Plan-per-query
+serves what needs a compiled streaming plan (event-time stateful windows,
+LATERAL VIEW EXPLODE). Many concurrent queries over one stream run through the
+engine's one shared-scan path, streaming.dynamic.DynamicMultiplexer: one scan
+and one routed aggregation per micro-batch for every live query.
 """
 
 from __future__ import annotations
@@ -37,15 +39,11 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W_spark
 
 from bullet_spark_spark.plans.spec import (
-    AggOp,
-    CountDistinctAgg,
     DistributionAgg,
     GroupAgg,
     Query,
@@ -81,7 +79,8 @@ class RateLimit:
     interval_ms: int
 
     def check(self, emit_times: list[float], now: float) -> str | None:
-        """Shared guard for all three streaming modes: prunes entries older
+        """Shared guard for both streaming modes (plan-per-query register
+        and the dynamic multiplexer): prunes entries older
         than the window IN PLACE (they can never affect the count again, so
         a long-lived query stays O(window), not O(lifetime)), then returns
         an error string if the budget is exceeded, else None."""
@@ -103,14 +102,10 @@ class QueryHandle:
     sink: MemorySink
     state: QueryState = QueryState.RUNNING
     stream: Any = None  # StreamingQuery
-    shared_stream: bool = False  # multiplexed: stream serves other queries too
     started_at: float = field(default_factory=time.time)
     emit_times: list[float] = field(default_factory=list)
     raw_rows_seen: int = 0
     error: str | None = None
-    # sketch metadata for estimated results (bullet's result meta [D]):
-    # set when a result came from a sketch estimate, None when exact
-    meta: dict | None = None
     _dead_sweeps: int = 0  # consecutive sweeps observing a dead stream
 
     def is_active(self) -> bool:
@@ -127,15 +122,9 @@ class QueryHandle:
         (append/complete) return the last non-empty emission."""
         agg = self.spec.aggregation
         if isinstance(agg, GroupAgg) and _output_mode(self.spec) == "update":
-            if self.shared_stream:
-                # multiplexed rows are (keys_dict, *aggs) — one key column
-                key_len = 1 if agg.fields else 0
-            else:
-                w = self.spec.window
-                windowed = (
-                    w.emit_unit is WindowUnit.TIME and w.event_time_field is not None
-                )
-                key_len = (1 if windowed else 0) + len(agg.fields)
+            w = self.spec.window
+            windowed = w.emit_unit is WindowUnit.TIME and w.event_time_field is not None
+            key_len = (1 if windowed else 0) + len(agg.fields)
             merged: dict[tuple, tuple] = {}
             for batch in self.sink.batches:
                 for row in batch:
@@ -368,325 +357,6 @@ class EngineRuntime:
             self.queries[qid] = handle
         return handle
 
-    def register_multiplexed(
-        self,
-        specs: dict[str, Query],
-        stream_df: DataFrame,
-        trigger_ms: int | None = None,
-        checkpoint_dir: str | None = None,
-        available_now: bool = False,
-        timeout_s: float = 120,
-        rate_limit: RateLimit | None = None,
-    ) -> dict[str, QueryHandle]:
-        """Run N heterogeneous queries as ONE streaming stage — the
-        reference's FilterStreaming multiplexing across EVERY query type
-        (FilterStreaming.scala:54-67 runs each live query's partition
-        ``Querier`` over the records; QueryManager categorize :105-110)
-        without the per-batch driver re-broadcast: predicates are baked into
-        one compiled plan, and each micro-batch runs exactly TWO jobs
-        regardless of query count —
-
-        1. one unified partial aggregation (operators.multiplex
-           .multiplex_partials) covering all GroupAgg / TopK / Distribution
-           (PMF/CDF) specs: one scan, one shuffle keyed by (query_id, keys);
-           typed mergeable partials (count/sum/min/max; AVG decomposes into
-           sum+count) merge into per-query state here — the
-           JoinStreaming.scala:126 ``combine`` step with Catalyst partials
-           instead of byte blobs,
-        2. one routed RAW pass appending matched records up to each RAW
-           query's remaining limit.
-
-        Results are bounded (bullet's own message-bus constraint), so the
-        merged state is result-sized, not input-sized. Use when query
-        cardinality is high enough that plan-per-query's N source
-        subscriptions dominate. The query set is fixed per incarnation
-        (restart the stage to change it — bullet has the same trade-off);
-        lifecycle (duration expiry, kill, RAW limit) is enforced sink-side +
-        sweeper.
-
-        CountDistinct (exact mode) multiplexes with the distinct key map
-        itself as the mergeable state (merge = key-set union — the
-        reference's exact-below-threshold regime [D]; state is bounded by
-        the field's cardinality, bullet's own posture). QUANTILE
-        multiplexes when ``DistributionAgg.width`` declares the linear
-        mergeable bucketing (per-bucket counts, sketch.hist_group_sketches
-        semantics; estimates within one width of exact). Approx
-        CountDistinct multiplexes too: hll_sketch_agg emits one
-        DataSketches-compatible blob per batch (partial_agg_columns),
-        blobs append to the merged state, and ONE hll_union_agg job
-        finalizes at read — the reference's byte-blob combine
-        (JoinStreaming.scala:126)."""
-        from bullet_spark_spark.operators.multiplex import (
-            multiplex_filter,
-            multiplex_partials,
-            partial_agg_columns,
-        )
-        from bullet_spark_spark.plans.spec import DistributionAgg as _Dist
-        from bullet_spark_spark.plans.spec import DistributionType as _DT
-
-        trigger_ms = trigger_ms or self.config.trigger_ms
-        for qid, spec in specs.items():
-            if spec.explode is not None:
-                raise ValueError(
-                    f"query {qid!r} uses LATERAL VIEW EXPLODE — the shared-"
-                    "scan multiplexer evaluates all queries over ONE row "
-                    "space and cannot expand rows per query; run explode "
-                    "queries through plan-per-query register()"
-                )
-        if rate_limit is None and self.config.rate_limit_enable:
-            rate_limit = RateLimit(
-                self.config.rate_limit_max_emits, self.config.rate_limit_interval_ms
-            )
-        agg_specs: dict[str, Query] = {}
-        raw_specs: dict[str, Query] = {}
-        for qid, spec in specs.items():
-            agg = spec.aggregation
-            if isinstance(agg, RawAgg):
-                raw_specs[qid] = spec
-            elif isinstance(agg, (GroupAgg, TopKAgg)):
-                agg_specs[qid] = spec
-            elif isinstance(agg, CountDistinctAgg):
-                agg_specs[qid] = spec  # exact: key map; approx: HLL blobs
-            elif isinstance(agg, _Dist) and agg.type in (_DT.PMF, _DT.CDF):
-                agg_specs[qid] = spec
-            elif isinstance(agg, _Dist) and agg.type is _DT.QUANTILE:
-                if not agg.width:
-                    raise ValueError(
-                        f"{qid}: multiplexed QUANTILE needs DistributionAgg.width "
-                        "(linear mergeable bucketing) — or use register()"
-                    )
-                agg_specs[qid] = spec
-            else:
-                raise ValueError(
-                    f"{qid}: {type(agg).__name__} partials are not mergeable — "
-                    "use register() for this query"
-                )
-        partial_agg_columns(agg_specs.values())  # validate op set up front
-
-        handles: dict[str, QueryHandle] = {
-            qid: QueryHandle(query_id=qid, spec=spec, sink=MemorySink(), shared_stream=True)
-            for qid, spec in specs.items()
-        }
-        # per-query merged partial state: key-tuple -> {partial_col: value}
-        state: dict[str, dict[tuple, dict[str, object]]] = {qid: {} for qid in agg_specs}
-
-        def _merge_val(name: str, a, b):
-            if a is None:
-                return b
-            if b is None:
-                return a
-            if name.startswith("count") or name.startswith("cntf") or name.startswith("sum"):
-                return a + b
-            if name.startswith("hll_"):
-                acc = a if isinstance(a, list) else [a]
-                return acc + [b]
-            if name.startswith("min"):
-                return min(a, b)
-            return max(a, b)
-
-        def _emit(handle: QueryHandle, columns: list[str], rows: list[tuple]) -> None:
-            if not rows:
-                return
-            with handle.sink._lock:
-                if handle.sink.columns is None:
-                    handle.sink.columns = columns
-                handle.sink.batches.append(rows)
-            # emit-rate guard in the shared stage (the reference enforces in
-            # both stages, FilterStreaming.scala:129-133 + JoinStreaming
-            # .scala:152-159); the sweeper turns error into FAIL + stop.
-            # emit_times only feeds the pruned window check — skip entirely
-            # when no limit is set
-            if rate_limit is not None and handle.error is None:
-                now = time.time()
-                handle.emit_times.append(now)
-                handle.error = rate_limit.check(handle.emit_times, now)
-
-        def _result_rows(qid: str) -> tuple[list[str], list[tuple]]:
-            """Current full merged result for one query (bounded)."""
-            spec = agg_specs[qid]
-            agg = spec.aggregation
-            groups = state[qid]
-            if isinstance(agg, GroupAgg):
-                ops = list(agg.operations) or [(AggOp.COUNT, None, "cnt")]
-                cols = ["keys", *[out for _, _, out in ops]]
-                rows = []
-                for key in sorted(groups, key=str):
-                    st = groups[key]
-                    vals = []
-                    for op, fld, _out in ops:
-                        if op is AggOp.COUNT:
-                            vals.append(st.get("count_"))
-                        elif op is AggOp.COUNT_FIELD:
-                            vals.append(st.get(f"cntf_{fld}"))
-                        elif op is AggOp.AVG:
-                            s, c = st.get(f"sum_{fld}"), st.get(f"cntf_{fld}")
-                            vals.append(s / c if s is not None and c else None)
-                        else:
-                            vals.append(st.get(f"{op.value.lower()}_{fld}"))
-                    rows.append((dict(key), *vals))
-                return cols, rows
-            if isinstance(agg, TopKAgg):
-                ranked = sorted(
-                    groups.items(), key=lambda kv: (-kv[1]["count_"], str(kv[0]))
-                )
-                if agg.threshold:
-                    ranked = [kv for kv in ranked if kv[1]["count_"] >= agg.threshold]
-                return ["keys", agg.name], [
-                    (dict(k), st["count_"]) for k, st in ranked[: agg.k]
-                ]
-            if isinstance(agg, CountDistinctAgg):
-                if agg.approx:
-                    name = "hll_" + "_".join(agg.fields)
-                    blobs: list[bytes] = []
-                    for st in groups.values():
-                        x = st.get(name)
-                        blobs.extend(x if isinstance(x, list) else [x])
-                    blobs = [bytes(b) for b in blobs if b is not None]
-                    from bullet_spark_spark.operators.sketch import hll_result_meta
-
-                    if not blobs:
-                        handles[qid].meta = hll_result_meta(0)
-                        return [agg.name], [(0,)]
-                    est = (
-                        self.spark.createDataFrame(
-                            [(b,) for b in blobs], "s binary"
-                        )
-                        .agg(
-                            F.hll_sketch_estimate(
-                                F.hll_union_agg(F.col("s"))
-                            ).alias("n")
-                        )
-                        .collect()[0]["n"]
-                    )
-                    handles[qid].meta = hll_result_meta(int(est))
-                    return [agg.name], [(int(est),)]
-                # merged state IS the distinct key set; SQL convention:
-                # tuples with any NULL component don't count
-                n = sum(
-                    1
-                    for k in groups
-                    if k and all(v is not None for _, v in k)
-                )
-                return [agg.name], [(n,)]
-            if agg.type is _DT.QUANTILE:
-                # merged per-bucket counts -> targeted rank, est = midpoint
-                import math as _math
-
-                buckets = sorted(
-                    (int(dict(k)["__bucket"]), st["count_"])
-                    for k, st in groups.items()
-                    if dict(k).get("__bucket") is not None
-                )
-                total = sum(c for _, c in buckets)
-                rows = []
-                for p in [float(x) for x in (agg.points or [0.5])]:
-                    rank = max(1, _math.ceil(p * total))
-                    run, est = 0, None
-                    for b, c in buckets:
-                        run += c
-                        if run >= rank:
-                            est = (b + 0.5) * agg.width
-                            break
-                    rows.append((p, est))
-                return ["q", "est"], rows
-            # Distribution PMF/CDF: key map is {"__bucket": idx}
-            buckets = sorted(
-                (int(dict(k)["__bucket"]), st["count_"]) for k, st in groups.items()
-            )
-            if agg.type is _DT.PMF:
-                return ["bucket", "count"], [(b, c) for b, c in buckets]
-            out, run = [], 0
-            for b, c in buckets:
-                run += c
-                out.append((b, run))
-            return ["bucket", "cum_count"], out
-
-        def emit(batch_df, epoch_id):
-            batch_df = batch_df.persist()
-            try:
-                if agg_specs:
-                    partials = multiplex_partials(batch_df, agg_specs).collect()
-                    part_names = (
-                        [f for f in partials[0].__fields__ if f not in ("query_id", "keys")]
-                        if partials
-                        else []
-                    )
-                    touched: set[str] = set()
-                    for r in partials:
-                        qid = r["query_id"]
-                        if handles[qid].state is not QueryState.RUNNING:
-                            continue  # sink-side lifecycle: killed/expired
-                        key = tuple(sorted((r["keys"] or {}).items()))
-                        st = state[qid].setdefault(key, {})
-                        for name in part_names:
-                            st[name] = _merge_val(name, st.get(name), r[name])
-                        touched.add(qid)
-                    for qid in touched:
-                        cols, rows = _result_rows(qid)
-                        _emit(handles[qid], cols, rows)
-                if raw_specs:
-                    live_raw = {
-                        qid: s
-                        for qid, s in raw_specs.items()
-                        if handles[qid].state is QueryState.RUNNING
-                        and handles[qid].raw_rows_seen < s.aggregation.limit
-                    }
-                    if live_raw:
-                        remaining = F.create_map(
-                            *[
-                                F.lit(x)
-                                for qid, s in live_raw.items()
-                                for x in (
-                                    qid,
-                                    s.aggregation.limit - handles[qid].raw_rows_seen,
-                                )
-                            ]
-                        )
-                        routed = multiplex_filter(
-                            batch_df, {qid: s.filter for qid, s in live_raw.items()}
-                        )
-                        w = W_spark.partitionBy("query_id").orderBy(
-                            F.monotonically_increasing_id()
-                        )
-                        picked = (
-                            routed.withColumn("__rn", F.row_number().over(w))
-                            .filter(F.col("__rn") <= remaining[F.col("query_id")])
-                            .drop("__rn")
-                            .collect()
-                        )
-                        by_qid: dict[str, list] = {}
-                        for r in picked:
-                            by_qid.setdefault(r["query_id"], []).append(tuple(r)[1:])
-                        data_cols = [c for c in batch_df.columns]
-                        for qid, rows in by_qid.items():
-                            _emit(handles[qid], data_cols, rows)
-                            handles[qid].raw_rows_seen += len(rows)
-            finally:
-                batch_df.unpersist()
-
-        writer = stream_df.writeStream.foreachBatch(emit)
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        self._ensure_listener()
-        if available_now:
-            stream = writer.trigger(availableNow=True).start()
-            stream.awaitTermination(timeout_s)
-            for handle in handles.values():
-                handle.stream = stream
-                if handle.state is QueryState.RUNNING:
-                    handle.state = QueryState.COMPLETED
-                    self._log(handle.query_id, Signal.COMPLETE)
-        else:
-            stream = writer.trigger(processingTime=f"{trigger_ms} milliseconds").start()
-            for handle in handles.values():
-                handle.stream = stream
-
-        with self._lock:
-            self.queries.update(handles)
-        if not available_now:
-            self._ensure_sweeper()
-        return handles
-
     # -- lifecycle ----------------------------------------------------------
 
     def kill(self, query_id: str) -> None:
@@ -843,15 +513,6 @@ class EngineRuntime:
         # must also see its terminal signal (stop() can block for a batch)
         self._log(handle.query_id, signal)
         handle.state = state
-        if handle.shared_stream:
-            # multiplexed: the stream serves other queries — lifecycle is
-            # sink-side (this handle stops receiving results); the shared
-            # stage stops when its last query finishes
-            if any(
-                h.is_active() and h.stream is handle.stream
-                for h in self.queries.values()
-            ):
-                return
         try:
             if handle.stream is not None and handle.stream.isActive:
                 handle.stream.stop()

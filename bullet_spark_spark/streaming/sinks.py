@@ -44,23 +44,3 @@ class MemorySink:
 def parquet_sink(path: str, checkpoint: str) -> dict[str, Any]:
     """Options bundle for a production parquet sink."""
     return {"format": "parquet", "path": path, "checkpointLocation": checkpoint}
-
-
-def start_kafka_sink(
-    df, bootstrap: str, topic: str, checkpoint: str, trigger_ms: int = 1000
-):
-    """Production result sink: rows serialized to JSON on a Kafka topic —
-    the PubSub publish path (ref ResultPublisher.scala:78-99) as a native
-    writeStream (requires the kafka connector jar on the cluster; not
-    exercised in this container)."""
-    from pyspark.sql import functions as F
-
-    payload = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-    return (
-        payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
-    )

@@ -350,17 +350,12 @@ def test_select_distinct_rejections():
 
 
 def test_explode_spec_rejected_by_multiplexers(spark):
-    from bullet_spark_spark.config import EngineConfig
     from bullet_spark_spark.streaming.dynamic import DynamicMultiplexer
-    from bullet_spark_spark.streaming.runtime import EngineRuntime
 
     q = parse_bql(
         "SELECT w, COUNT(*) AS c FROM STREAM() "
         "LATERAL VIEW EXPLODE(SPLIT(text, ' ')) AS w GROUP BY w"
     )
-    rt = EngineRuntime(spark, EngineConfig())
-    with pytest.raises(ValueError, match="EXPLODE"):
-        rt.register_multiplexed({"q1": q}, spark.range(1).toDF("text"))
-    dyn = DynamicMultiplexer(spark, EngineConfig())
+    dyn = DynamicMultiplexer(spark)
     with pytest.raises(ValueError, match="EXPLODE"):
         dyn.register("q1", q)

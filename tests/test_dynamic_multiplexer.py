@@ -35,6 +35,14 @@ def test_dynamic_merge_equals_batch(spark, tables, tmp_path):
             aggregation=GroupAgg(fields=[], operations=[(AggOp.COUNT, None, "cnt")]),
         ),
     )
+    h3 = mux.register(
+        "none",
+        Query(
+            source="events",
+            filter=E.f("value") > 1000,
+            aggregation=GroupAgg(fields=["event_type"]),
+        ),
+    )
     stream = file_drip(spark, tables["events"], str(tmp_path), chunks=4)
     mux.start(stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True)
 
@@ -48,6 +56,7 @@ def test_dynamic_merge_equals_batch(spark, tables, tmp_path):
     }
     assert h1.groups == expected
     assert h2.groups[()][0] == tables["events"].count()
+    assert h3.result() == []  # no row routes to a never-matching filter
     assert h1.state is QueryState.COMPLETED
 
 
@@ -55,10 +64,11 @@ def test_dynamic_full_op_set(spark, tables, tmp_path):
     """The dynamic (mid-stream-mutation) mode now multiplexes EVERY query
     family — GroupAgg + TopK + exact CountDistinct + Distribution
     (PMF/CDF/QUANTILE-with-width) + RAW — in one routed job per batch,
-    matching the static multiplexer's coverage and the reference's
-    every-type filter stage (FilterStreaming.scala:54-67)."""
+    matching the reference's every-type filter stage
+    (FilterStreaming.scala:54-67); each result equals its batch answer."""
     import math
 
+    from bullet_spark_spark.plans import compile_query
     from bullet_spark_spark.plans.spec import (
         CountDistinctAgg,
         DistributionAgg,
@@ -87,20 +97,18 @@ def test_dynamic_full_op_set(spark, tables, tmp_path):
             filter=E.f("event_type") == "view",
             aggregation=DistributionAgg(
                 type=DistributionType.QUANTILE, field="value",
-                points=[0.5], width=5.0,
+                points=[0.5, 0.9], width=5.0,
             ),
         ),
     )
-    mux.register(
-        "cdf",
-        Query(
-            source="events",
-            aggregation=DistributionAgg(
-                type=DistributionType.CDF, field="value",
-                start=0.0, end=100.0, num_buckets=4,
-            ),
+    cdf_spec = Query(
+        source="events",
+        aggregation=DistributionAgg(
+            type=DistributionType.CDF, field="value",
+            start=0.0, end=100.0, num_buckets=4,
         ),
     )
+    mux.register("cdf", cdf_spec)
     mux.register(
         "raw",
         Query(
@@ -110,12 +118,18 @@ def test_dynamic_full_op_set(spark, tables, tmp_path):
         ),
     )
     mux.register(
-        "avg",
+        "grp",
         Query(
             source="events",
+            filter=E.f("value") > 50,
             aggregation=GroupAgg(
                 fields=["event_type"],
-                operations=[(AggOp.AVG, "value", "av"), (AggOp.COUNT, None, "c")],
+                operations=[
+                    (AggOp.AVG, "value", "av"),
+                    (AggOp.COUNT, None, "c"),
+                    (AggOp.SUM, "value", "sv"),
+                    (AggOp.MIN, "value", "mn"),
+                ],
             ),
         ),
     )
@@ -147,18 +161,19 @@ def test_dynamic_full_op_set(spark, tables, tmp_path):
     counts: dict[int, int] = {}
     for v in vals:
         counts[math.floor(v / 5.0)] = counts.get(math.floor(v / 5.0), 0) + 1
-    rank, run, est = max(1, math.ceil(0.5 * len(vals))), 0, None
-    for b in sorted(counts):
-        run += counts[b]
-        if run >= rank:
-            est = (b + 0.5) * 5.0
-            break
-    assert mux.queries["qnt"].result() == [(0.5, est)]
+    exp_q = []
+    for p in (0.5, 0.9):
+        rank, run = max(1, math.ceil(p * len(vals))), 0
+        for b in sorted(counts):
+            run += counts[b]
+            if run >= rank:
+                exp_q.append((p, (b + 0.5) * 5.0))
+                break
+    assert mux.queries["qnt"].result() == exp_q
 
-    # CDF monotone, totals match
-    cdf = mux.queries["cdf"].result()
-    assert cdf[-1][1] == ev.filter(F.col("value").isNotNull()).count()
-    assert all(a[1] <= b[1] for a, b in zip(cdf, cdf[1:]))
+    # CDF vs the compiled batch plan, row for row
+    exp_cdf = [(r["bucket"], r["cum_count"]) for r in compile_query(spark, cdf_spec).collect()]
+    assert mux.queries["cdf"].result() == exp_cdf
 
     # RAW vs batch filter
     exp_raw = sorted(
@@ -170,18 +185,24 @@ def test_dynamic_full_op_set(spark, tables, tmp_path):
     idx = h.raw_columns.index("event_id")
     assert sorted(r[idx] for r in h.result()) == exp_raw
 
-    # AVG decomposed into mergeable sum+count partials, finalized sink-side
-    exp_avg = {
-        r["event_type"]: (r["av"], r["c"])
-        for r in ev.groupBy("event_type")
-        .agg(F.avg("value").alias("av"), F.count(F.lit(1)).alias("c"))
+    # GroupAgg vs batch; AVG decomposed into mergeable sum+count partials,
+    # finalized sink-side
+    exp_grp = {
+        r["event_type"]: (r["av"], r["c"], r["sv"], r["mn"])
+        for r in ev.filter(F.col("value") > 50)
+        .groupBy("event_type")
+        .agg(
+            F.avg("value").alias("av"), F.count(F.lit(1)).alias("c"),
+            F.sum("value").alias("sv"), F.min("value").alias("mn"),
+        )
         .collect()
     }
-    got_avg = {k: (av, c) for k, av, c in mux.queries["avg"].result()}
-    assert set(got_avg) == set(exp_avg)
-    for k in exp_avg:
-        assert got_avg[k][1] == exp_avg[k][1]
-        assert abs(got_avg[k][0] - exp_avg[k][0]) < 1e-9
+    got_grp = {k: vals for k, *vals in mux.queries["grp"].result()}
+    assert set(got_grp) == set(exp_grp)
+    for k, (av, c, sv, mn) in exp_grp.items():
+        assert got_grp[k][1] == c and got_grp[k][3] == mn
+        assert abs(got_grp[k][0] - av) < 1e-9
+        assert abs(got_grp[k][2] - sv) < 1e-6
 
 
 def test_dynamic_raw_limit_completes(spark, tables, tmp_path):
@@ -193,9 +214,14 @@ def test_dynamic_raw_limit_completes(spark, tables, tmp_path):
     h = mux.register(
         "raw3", Query(source="events", aggregation=RawAgg(limit=3))
     )
+    sibling = mux.register(
+        "grp", Query(source="events", aggregation=GroupAgg(fields=[]))
+    )
     stream = file_drip(spark, tables["events"], str(tmp_path), chunks=4)
     mux.start(stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True)
     assert len(h.raw_rows) == 3
+    # the shared stage kept serving the sibling after RAW completed
+    assert sibling.result() == [(tables["events"].count(),)]
     assert h.state is QueryState.COMPLETED
     assert any(q == "raw3" and s.value == "COMPLETE" for q, s, _ in mux.status_log)
 
@@ -235,9 +261,15 @@ def test_register_mid_stream(spark, tables, tmp_path):
 
 
 def test_kill_immediate(spark, tables, tmp_path):
+    """A kill is registry-side: the victim is never evaluated again while
+    the shared stage keeps serving its siblings."""
     mux = DynamicMultiplexer(spark)
     h = mux.register(
         "victim",
+        Query(source="events", aggregation=GroupAgg(fields=[], operations=[(AggOp.COUNT, None, "c")])),
+    )
+    sibling = mux.register(
+        "sibling",
         Query(source="events", aggregation=GroupAgg(fields=[], operations=[(AggOp.COUNT, None, "c")])),
     )
     mux.kill("victim")
@@ -245,6 +277,7 @@ def test_kill_immediate(spark, tables, tmp_path):
     mux.start(stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True)
     assert h.groups == {}  # never evaluated after kill
     assert h.state is QueryState.KILLED
+    assert sibling.result() == [(tables["events"].count(),)]
 
 
 def test_null_partial_merge(spark):
@@ -263,8 +296,8 @@ def test_null_partial_merge(spark):
     )
     b1 = spark.createDataFrame([("a", 3.0), ("b", None)], "k string, v double")
     b2 = spark.createDataFrame([("a", None), ("b", 2.0)], "k string, v double")
-    mux._process_batch(b1, 0)
-    mux._process_batch(b2, 1)
+    mux.process_batch(b1, 0)
+    mux.process_batch(b2, 1)
     assert h.groups[("a",)] == [3.0, 3.0]
     assert h.groups[("b",)] == [2.0, 2.0]
 
@@ -302,7 +335,7 @@ def test_shared_fieldset_batches_into_one_job(spark, monkeypatch):
     monkeypatch.setattr(
         DataFrame, "toArrow", lambda self: (calls.append(1), orig_arrow(self))[1]
     )
-    mux._process_batch(batch, 0)
+    mux.process_batch(batch, 0)
     assert len(calls) == 1  # ["k"] sets + [] set share ONE grouping-sets job
     assert mux.queries["q0"].groups == {("a",): [2, 4.0], ("b",): [1, 5.0]}  # v>0
     assert mux.queries["q1"].groups == {("a",): [1, 3.0], ("b",): [1, 5.0]}  # v>2
@@ -330,7 +363,7 @@ def test_dynamic_group_with_all_null_agg_inputs_survives(spark):
     batch = spark.createDataFrame(
         [("a", None), ("a", None), ("b", 5.0)], "k string, x double"
     )
-    mux._process_batch(batch, 0)
+    mux.process_batch(batch, 0)
     assert h.groups[("a",)] == [None, 0]  # matched rows, NULL min, zero count_field
     assert h.groups[("b",)] == [5.0, 1]
 

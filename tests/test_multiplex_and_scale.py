@@ -1,5 +1,9 @@
 """Multiplexer, salted aggregation, concurrent queries, checkpoint recovery —
-the scale-posture behaviors (SURVEY §7.3)."""
+the scale-posture behaviors (SURVEY §7.3). The multiplexer tests here feed
+``DynamicMultiplexer.process_batch`` (the ``foreachBatch`` body) fixed
+slices of ``events``, so batch boundaries and lifecycle steps between
+batches are deterministic; test_dynamic_multiplexer.py drives the same
+multiplexer from a live stream."""
 
 from __future__ import annotations
 
@@ -8,55 +12,373 @@ import time
 from pyspark.sql import functions as F
 
 from bullet_spark_spark.functions.exprs import E
-from bullet_spark_spark.operators.multiplex import multiplex_filter, multiplex_group_count
 from bullet_spark_spark.operators.relational import salted_group_agg
 from bullet_spark_spark.plans.spec import AggOp, GroupAgg, Query
 from bullet_spark_spark.sources.streaming import file_drip
 from bullet_spark_spark.streaming import EngineRuntime, QueryState
+from bullet_spark_spark.streaming.dynamic import DynamicMultiplexer
+
+
+def _slices(ev, n=4):
+    """``events`` cut into n interleaved micro-batches (event_id mod n)."""
+    return [ev.filter(F.col("event_id") % n == i) for i in range(n)]
+
+
+def _count(pred=None):
+    return Query(
+        source="events",
+        filter=pred,
+        aggregation=GroupAgg(fields=[], operations=[(AggOp.COUNT, None, "n")]),
+    )
 
 
 def test_multiplex_filter_matches_individual(spark, tables):
+    """Each row routes to every query whose filter it passes: a routed
+    count equals that filter's own count, an unfiltered query sees every
+    row, and a never-matching query gets no groups."""
     ev = tables["events"]
+    mux = DynamicMultiplexer(spark)
     preds = {
         "q_hi": E.f("value") > 90,
         "q_purchase": E.f("event_type") == "purchase",
         "q_all": None,
         "q_none": E.f("value") > 1000,
     }
-    routed = multiplex_filter(ev, preds)
-    counts = {r["query_id"]: r["n"] for r in routed.groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert counts.get("q_hi") == ev.filter(F.col("value") > 90).count()
-    assert counts.get("q_purchase") == ev.filter(F.col("event_type") == "purchase").count()
-    assert counts.get("q_all") == ev.count()
-    assert "q_none" not in counts
+    for qid, pred in preds.items():
+        mux.register(qid, _count(pred))
+    mux.process_batch(ev, 0)
+    counts = {qid: h.groups.get((), [None])[0] for qid, h in mux.queries.items()}
+    assert counts["q_hi"] == ev.filter(F.col("value") > 90).count()
+    assert counts["q_purchase"] == ev.filter(F.col("event_type") == "purchase").count()
+    assert counts["q_all"] == ev.count()
+    assert mux.queries["q_none"].groups == {}
 
 
 def test_multiplex_single_scan(spark, tables):
     """The point of the multiplexer: one parquet scan for N queries."""
-    ev = tables["events"]
-    routed = multiplex_filter(ev, {f"q{i}": E.f("value") > i * 10 for i in range(8)})
-    plan = routed._jdf.queryExecution().executedPlan().toString()
+    mux = DynamicMultiplexer(spark)
+    for i in range(8):
+        mux.register(f"q{i}", _count(E.f("value") > i * 10))
+    agg_compiled, _raw = mux._compile_live([(h, h.spec) for h in mux.queries.values()])
+    frame, _gid = DynamicMultiplexer._agg_frame(tables["events"], agg_compiled)
+    plan = frame._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") <= 1
 
 
 def test_multiplex_group_count(spark, tables):
     ev = tables["events"]
-    out = multiplex_group_count(
-        ev,
-        {
-            "by_type": (E.f("value") > 50, GroupAgg(fields=["event_type"])),
-            "by_user_mod": (None, GroupAgg(fields=["user_id"])),
-        },
+    mux = DynamicMultiplexer(spark)
+    by_type = mux.register(
+        "by_type",
+        Query(source="events", filter=E.f("value") > 50, aggregation=GroupAgg(fields=["event_type"])),
     )
-    rows = out.collect()
-    by_type = {r["keys"]["event_type"]: r["cnt"] for r in rows if r["query_id"] == "by_type"}
+    by_user = mux.register(
+        "by_user_mod", Query(source="events", aggregation=GroupAgg(fields=["user_id"]))
+    )
+    mux.process_batch(ev, 0)
     expected = {
         r["event_type"]: r["n"]
         for r in ev.filter(F.col("value") > 50).groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    assert by_type == expected
-    n_users = len([r for r in rows if r["query_id"] == "by_user_mod"])
-    assert n_users == ev.select("user_id").distinct().count()
+    assert dict(by_type.result()) == expected
+    assert len(by_user.result()) == ev.select("user_id").distinct().count()
+
+
+def test_streaming_multiplexer(spark, tables):
+    """N queries, ONE routed aggregation per micro-batch (the reference's
+    FilterStreaming role): partials merged across batches route to
+    per-query handles and match per-query batch answers."""
+    ev = tables["events"]
+    mux = DynamicMultiplexer(spark)
+    hi_by_type = mux.register(
+        "hi_by_type",
+        Query(source="events", filter=E.f("value") > 50, aggregation=GroupAgg(fields=["event_type"])),
+    )
+    purchases = mux.register(
+        "purchases",
+        Query(source="events", filter=E.f("event_type") == "purchase", aggregation=GroupAgg(fields=[])),
+    )
+    for epoch, batch in enumerate(_slices(ev)):
+        mux.process_batch(batch, epoch)
+
+    expected = {
+        r["event_type"]: r["n"]
+        for r in ev.filter(F.col("value") > 50).groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert dict(hi_by_type.result()) == expected
+    assert purchases.result() == [(ev.filter(F.col("event_type") == "purchase").count(),)]
+
+
+def test_streaming_multiplexer_with_ops(spark, tables):
+    """Heterogeneous op lists: each handle receives exactly its spec's
+    outputs, computed in the one shared aggregation."""
+    ev = tables["events"]
+    mux = DynamicMultiplexer(spark)
+    sum_by_type = mux.register(
+        "sum_by_type",
+        Query(
+            source="events",
+            aggregation=GroupAgg(
+                fields=["event_type"],
+                operations=[(AggOp.SUM, "value", "sv"), (AggOp.MAX, "value", "mx")],
+            ),
+        ),
+    )
+    cnt_hi = mux.register("cnt_hi", _count(E.f("value") > 80))
+    for epoch, batch in enumerate(_slices(ev, 3)):
+        mux.process_batch(batch, epoch)
+
+    final = {k: (sv, mx) for k, sv, mx in sum_by_type.result()}
+    expected = {
+        r["event_type"]: (r["sv"], r["mx"])
+        for r in ev.groupBy("event_type").agg(F.sum("value").alias("sv"), F.max("value").alias("mx")).collect()
+    }
+    assert set(final) == set(expected)
+    for k in expected:
+        assert abs(final[k][0] - expected[k][0]) < 1e-6
+        assert final[k][1] == expected[k][1]
+    assert cnt_hi.result() == [(ev.filter(F.col("value") > 80).count(),)]
+
+
+def test_multiplexer_kill_is_sink_side(spark, tables):
+    """Killing one multiplexed query between batches freezes its state and
+    does not stop the shared stage: its sibling keeps merging."""
+    ev = tables["events"]
+    batches = _slices(ev)
+    mux = DynamicMultiplexer(spark)
+    a = mux.register("a", Query(source="events", aggregation=GroupAgg(fields=["event_type"])))
+    b = mux.register("b", _count())
+    mux.process_batch(batches[0], 0)
+    assert a.groups and b.groups
+    mux.kill("a")
+    assert a.state is QueryState.KILLED
+    frozen = {k: list(v) for k, v in a.groups.items()}
+    for epoch, batch in enumerate(batches[1:], start=1):
+        mux.process_batch(batch, epoch)
+    assert a.groups == frozen  # never evaluated after the kill
+    assert b.state is QueryState.RUNNING
+    assert b.result() == [(ev.count(),)]
+
+
+def test_multiplexer_full_op_set(spark, tables):
+    """The reference multiplexes EVERY query type in one pass
+    (FilterStreaming.scala:54-67): RAW + TopK + GroupAgg(with AVG) +
+    Distribution CDF + COUNT DISTINCT + QUANTILE share each batch's routed
+    jobs, and after merging four interleaved batches each query's result
+    matches its plan-per-query batch answer."""
+    import math
+
+    from bullet_spark_spark.plans import compile_query
+    from bullet_spark_spark.plans.spec import (
+        CountDistinctAgg,
+        DistributionAgg,
+        DistributionType,
+        RawAgg,
+        TopKAgg,
+    )
+
+    ev = tables["events"]
+    specs = {
+        "grp": Query(
+            source="events",
+            filter=E.f("value") > 50,
+            aggregation=GroupAgg(
+                fields=["event_type"],
+                operations=[
+                    (AggOp.COUNT, None, "cnt"),
+                    (AggOp.SUM, "value", "sv"),
+                    (AggOp.AVG, "value", "av"),
+                    (AggOp.MIN, "value", "mn"),
+                ],
+            ),
+        ),
+        "topk": Query(source="events", aggregation=TopKAgg(fields=["event_type"], k=3, name="cnt")),
+        "cdf": Query(
+            source="events",
+            aggregation=DistributionAgg(
+                type=DistributionType.CDF, field="value", start=0.0, end=100.0, num_buckets=4,
+            ),
+        ),
+        "raw": Query(
+            source="events",
+            filter=(E.f("value") > 99) & (E.f("event_type") == "error"),
+            aggregation=RawAgg(limit=1_000_000),
+        ),
+        "cd": Query(
+            source="events",
+            filter=E.f("value") > 50,
+            aggregation=CountDistinctAgg(fields=["user_id"], name="cd"),
+        ),
+        "qnt": Query(
+            source="events",
+            filter=E.f("event_type") == "view",
+            aggregation=DistributionAgg(
+                type=DistributionType.QUANTILE, field="value", points=[0.5, 0.9], width=5.0,
+            ),
+        ),
+    }
+    mux = DynamicMultiplexer(spark)
+    handles = {qid: mux.register(qid, spec) for qid, spec in specs.items()}
+    for epoch, batch in enumerate(_slices(ev)):
+        mux.process_batch(batch, epoch)
+
+    # GroupAgg vs batch
+    exp = {
+        r["event_type"]: (r["cnt"], r["sv"], r["av"], r["mn"])
+        for r in ev.filter(F.col("value") > 50)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sv"),
+            F.avg("value").alias("av"), F.min("value").alias("mn"),
+        )
+        .collect()
+    }
+    got = {k: (cnt, sv, av, mn) for k, cnt, sv, av, mn in handles["grp"].result()}
+    assert set(got) == set(exp)
+    for k in exp:
+        assert got[k][0] == exp[k][0] and got[k][3] == exp[k][3]
+        assert abs(got[k][1] - exp[k][1]) < 1e-6
+        assert abs(got[k][2] - exp[k][2]) < 1e-9
+
+    # TopK vs batch
+    exp_topk = [
+        (r["event_type"], r["cnt"])
+        for r in ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
+        .orderBy(F.col("cnt").desc(), F.col("event_type")).limit(3).collect()
+    ]
+    assert handles["topk"].result() == exp_topk
+
+    # CDF vs compiled batch plan
+    exp_cdf = [(r["bucket"], r["cum_count"]) for r in compile_query(spark, specs["cdf"]).collect()]
+    assert handles["cdf"].result() == exp_cdf
+
+    # RAW vs batch filter
+    exp_raw = sorted(
+        r["event_id"]
+        for r in ev.filter((F.col("value") > 99) & (F.col("event_type") == "error"))
+        .select("event_id").collect()
+    )
+    idx = handles["raw"].raw_columns.index("event_id")
+    assert sorted(r[idx] for r in handles["raw"].result()) == exp_raw
+
+    # COUNT DISTINCT vs batch exact
+    exp_cd = (
+        ev.filter(F.col("value") > 50)
+        .select("user_id").distinct().filter(F.col("user_id").isNotNull())
+        .count()
+    )
+    assert handles["cd"].result() == [(exp_cd,)]
+
+    # QUANTILE vs batch-side linear-histogram targeted rank
+    vals = sorted(
+        r["value"]
+        for r in ev.filter((F.col("event_type") == "view") & F.col("value").isNotNull())
+        .select("value").collect()
+    )
+    counts: dict[int, int] = {}
+    for v in vals:
+        counts[math.floor(v / 5.0)] = counts.get(math.floor(v / 5.0), 0) + 1
+    exp_q = []
+    for p in (0.5, 0.9):
+        rank, run = max(1, math.ceil(p * len(vals))), 0
+        for b in sorted(counts):
+            run += counts[b]
+            if run >= rank:
+                exp_q.append((p, (b + 0.5) * 5.0))
+                break
+    assert handles["qnt"].result() == exp_q
+
+
+def test_multiplexer_raw_limit_completes(spark, tables):
+    """A multiplexed RAW query fills its limit across batches, keeps
+    exactly limit rows, completes, and leaves the shared stage serving
+    its sibling."""
+    from bullet_spark_spark.plans.spec import RawAgg
+
+    ev = tables["events"]
+    mux = DynamicMultiplexer(spark)
+    raw5 = mux.register("raw5", Query(source="events", aggregation=RawAgg(limit=5)))
+    grp = mux.register("grp", _count())
+    mux.process_batch(ev.filter(F.col("event_id") < 3), 0)
+    assert len(raw5.raw_rows) == 3 and raw5.state is QueryState.RUNNING
+    mux.process_batch(ev.filter((F.col("event_id") >= 3) & (F.col("event_id") < 500)), 1)
+    assert raw5.state is QueryState.COMPLETED
+    assert len(raw5.result()) == 5
+    mux.process_batch(ev.filter(F.col("event_id") >= 500), 2)
+    assert len(raw5.result()) == 5
+    assert grp.state is QueryState.RUNNING
+    assert grp.result() == [(ev.count(),)]
+
+
+def test_multiplexer_rate_limit_fail(spark, tables):
+    """W9 on the shared stage: a query whose state updates in more batches
+    than its emit budget allows is FAILed with a FAIL signal, and is not
+    evaluated again, while its sibling keeps running — two-stage rate
+    enforcement parity (FilterStreaming.scala:129-133,
+    JoinStreaming.scala:152-159)."""
+    from bullet_spark_spark.streaming.runtime import RateLimit, Signal
+
+    ev = tables["events"]
+    batches = _slices(ev)
+    mux = DynamicMultiplexer(spark)
+    throttled = mux.register(
+        "throttled",
+        Query(source="events", aggregation=GroupAgg(fields=["event_type"])),
+        rate_limit=RateLimit(max_emits=2, interval_ms=60_000),
+    )
+    grp = mux.register("grp", _count())
+    for epoch in range(2):
+        mux.process_batch(batches[epoch], epoch)
+    assert throttled.state is QueryState.RUNNING
+    mux.process_batch(batches[2], 2)
+    assert throttled.state is QueryState.FAILED
+    assert "rate limit" in (throttled.error or "")
+    assert ("throttled", Signal.FAIL) in [(q, s) for q, s, _ in mux.status_log]
+    frozen = {k: list(v) for k, v in throttled.groups.items()}
+    mux.process_batch(batches[3], 3)
+    assert throttled.groups == frozen
+    assert grp.state is QueryState.RUNNING
+    assert grp.result() == [(ev.count(),)]
+
+
+def test_multiplexed_approx_count_distinct(spark, tables):
+    """Approx COUNT DISTINCT: one HLL blob per batch rides the shared
+    aggregation, blobs accumulate across batches, one hll_union_agg job
+    finalizes. Sparse-mode HLL is exact at the fixture's cardinality, so
+    the estimate must equal the exact-CD answer running alongside."""
+    from bullet_spark_spark.plans.spec import CountDistinctAgg
+
+    ev = tables["events"]
+    mux = DynamicMultiplexer(spark)
+    acd = mux.register(
+        "acd",
+        Query(
+            source="events",
+            filter=E.f("value") > 50,
+            aggregation=CountDistinctAgg(fields=["user_id"], approx=True),
+        ),
+    )
+    ecd = mux.register(
+        "ecd",
+        Query(
+            source="events",
+            filter=E.f("value") > 50,
+            aggregation=CountDistinctAgg(fields=["user_id"]),
+        ),
+    )
+    mux.register(
+        "g",
+        Query(
+            source="events",
+            aggregation=GroupAgg(fields=["event_type"], operations=[(AggOp.COUNT, None, "n")]),
+        ),
+    )
+    for epoch, batch in enumerate(_slices(ev)):
+        mux.process_batch(batch, epoch)
+
+    exact = ev.filter(F.col("value") > 50).select("user_id").distinct().count()
+    assert ecd.result() == [(exact,)]
+    assert acd.result() == [(exact,)]
 
 
 def test_salted_group_agg_under_skew(spark, tables):
@@ -170,121 +492,6 @@ def test_concurrent_queries_shared_source(spark, tables, tmp_path):
         rt.stop_all()
 
 
-def test_streaming_multiplexer(spark, tables, tmp_path):
-    """N queries, ONE streaming stage (the reference's FilterStreaming role):
-    results route to per-query handles and match per-query batch answers."""
-    rt = EngineRuntime(spark)
-    try:
-        stream = file_drip(spark, tables["events"], str(tmp_path), chunks=4)
-        specs = {
-            "hi_by_type": Query(
-                source="events",
-                filter=E.f("value") > 50,
-                aggregation=GroupAgg(fields=["event_type"]),
-            ),
-            "purchases": Query(
-                source="events",
-                filter=E.f("event_type") == "purchase",
-                aggregation=GroupAgg(fields=[]),
-            ),
-        }
-        handles = rt.register_multiplexed(
-            specs, stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True
-        )
-        assert all(h.state.value == "COMPLETED" for h in handles.values())
-
-        # last emission per key-tuple wins (update mode)
-        final = {}
-        for batch in handles["hi_by_type"].sink.batches:
-            for keys, cnt in batch:
-                final[keys.get("event_type")] = cnt
-        expected = {
-            r["event_type"]: r["n"]
-            for r in tables["events"]
-            .filter(F.col("value") > 50)
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        assert final == expected
-
-        p_final = handles["purchases"].final_result()
-        n_purchases = tables["events"].filter(F.col("event_type") == "purchase").count()
-        assert p_final[-1][1] == n_purchases
-    finally:
-        rt.stop_all()
-
-
-def test_streaming_multiplexer_with_ops(spark, tables, tmp_path):
-    """Static multiplexer with heterogeneous op lists: each handle receives
-    exactly its spec's outputs, computed in the one shared aggregation."""
-    from bullet_spark_spark.plans.spec import AggOp
-
-    rt = EngineRuntime(spark)
-    try:
-        stream = file_drip(spark, tables["events"], str(tmp_path), chunks=3)
-        specs = {
-            "sum_by_type": Query(
-                source="events",
-                aggregation=GroupAgg(
-                    fields=["event_type"],
-                    operations=[(AggOp.SUM, "value", "sv"), (AggOp.MAX, "value", "mx")],
-                ),
-            ),
-            "cnt_hi": Query(
-                source="events",
-                filter=E.f("value") > 80,
-                aggregation=GroupAgg(fields=[], operations=[(AggOp.COUNT, None, "n")]),
-            ),
-        }
-        handles = rt.register_multiplexed(
-            specs, stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True
-        )
-        assert handles["sum_by_type"].sink.columns == ["keys", "sv", "mx"]
-        final = {}
-        for batch in handles["sum_by_type"].sink.batches:
-            for keys, sv, mx in batch:
-                final[keys["event_type"]] = (sv, mx)
-        expected = {
-            r["event_type"]: (r["sv"], r["mx"])
-            for r in tables["events"]
-            .groupBy("event_type")
-            .agg(F.sum("value").alias("sv"), F.max("value").alias("mx"))
-            .collect()
-        }
-        assert set(final) == set(expected)
-        for k in expected:
-            assert abs(final[k][0] - expected[k][0]) < 1e-6
-            assert final[k][1] == expected[k][1]
-        n_hi = tables["events"].filter(F.col("value") > 80).count()
-        assert handles["cnt_hi"].final_result()[-1][1] == n_hi
-    finally:
-        rt.stop_all()
-
-
-def test_multiplexer_kill_is_sink_side(spark, tables, tmp_path):
-    """Killing one multiplexed query must not stop the shared stage."""
-    rt = EngineRuntime(spark)
-    try:
-        stream = file_drip(spark, tables["events"], str(tmp_path), chunks=8)
-        specs = {
-            "a": Query(source="events", aggregation=GroupAgg(fields=["event_type"])),
-            "b": Query(source="events", aggregation=GroupAgg(fields=[])),
-        }
-        handles = rt.register_multiplexed(specs, stream, trigger_ms=150)
-        rt.kill("a")
-        assert handles["a"].state.value == "KILLED"
-        assert handles["b"].is_active()
-        assert handles["b"].stream.isActive  # shared stage survives
-        deadline = time.time() + 60
-        while not handles["b"].sink.batches and time.time() < deadline:
-            time.sleep(0.2)
-        assert handles["b"].sink.batches  # b still receives results
-        assert not handles["a"].sink.batches or handles["a"].state.value == "KILLED"
-    finally:
-        rt.stop_all()
-
-
 def test_bucketed_join_no_shuffle(spark, tables, tmp_path):
     """Co-located join: both fact tables bucketed+sorted on the join key →
     SortMergeJoin with NO Exchange on either side (the bucketing strategy
@@ -362,256 +569,3 @@ def test_checkpoint_recovery(spark, tables, tmp_path):
     assert n_second == ev.filter(F.col("event_id") >= 500).count()
     ids = {r[0] for r in second.rows}
     assert all(i >= 500 for i in ids)
-
-
-def test_multiplexer_full_op_set(spark, tables, tmp_path):
-    """The reference multiplexes EVERY query type in one pass
-    (FilterStreaming.scala:54-67, categorize :105-110): one shared stage runs
-    RAW + TopK + GroupAgg(with AVG) + Distribution CDF + COUNT DISTINCT +
-    QUANTILE together, and each query's result matches its plan-per-query
-    batch answer (the reference's filter stage produces mergeable partials
-    for every aggregation type, FilterStreaming.scala:124)."""
-    from bullet_spark_spark.plans.spec import (
-        CountDistinctAgg,
-        DistributionAgg,
-        DistributionType,
-        RawAgg,
-        TopKAgg,
-    )
-
-    rt = EngineRuntime(spark)
-    try:
-        ev = tables["events"]
-        stream = file_drip(spark, ev, str(tmp_path), chunks=4)
-        specs = {
-            "grp": Query(
-                source="events",
-                filter=E.f("value") > 50,
-                aggregation=GroupAgg(
-                    fields=["event_type"],
-                    operations=[
-                        (AggOp.COUNT, None, "cnt"),
-                        (AggOp.SUM, "value", "sv"),
-                        (AggOp.AVG, "value", "av"),
-                        (AggOp.MIN, "value", "mn"),
-                    ],
-                ),
-            ),
-            "topk": Query(
-                source="events",
-                aggregation=TopKAgg(fields=["event_type"], k=3, name="cnt"),
-            ),
-            "cdf": Query(
-                source="events",
-                aggregation=DistributionAgg(
-                    type=DistributionType.CDF, field="value",
-                    start=0.0, end=100.0, num_buckets=4,
-                ),
-            ),
-            "raw": Query(
-                source="events",
-                filter=(E.f("value") > 99) & (E.f("event_type") == "error"),
-                aggregation=RawAgg(limit=1_000_000),
-            ),
-            "cd": Query(
-                source="events",
-                filter=E.f("value") > 50,
-                aggregation=CountDistinctAgg(fields=["user_id"], name="cd"),
-            ),
-            "qnt": Query(
-                source="events",
-                filter=E.f("event_type") == "view",
-                aggregation=DistributionAgg(
-                    type=DistributionType.QUANTILE, field="value",
-                    points=[0.5, 0.9], width=5.0,
-                ),
-            ),
-        }
-        handles = rt.register_multiplexed(
-            specs, stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True
-        )
-        assert all(h.state.value == "COMPLETED" for h in handles.values())
-
-        # GroupAgg vs batch
-        exp = {
-            r["event_type"]: (r["cnt"], r["sv"], r["av"], r["mn"])
-            for r in ev.filter(F.col("value") > 50)
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sv"),
-                F.avg("value").alias("av"), F.min("value").alias("mn"),
-            )
-            .collect()
-        }
-        got = {
-            keys["event_type"]: (cnt, sv, av, mn)
-            for keys, cnt, sv, av, mn in handles["grp"].sink.batches[-1]
-        }
-        assert set(got) == set(exp)
-        for k in exp:
-            assert got[k][0] == exp[k][0] and got[k][3] == exp[k][3]
-            assert abs(got[k][1] - exp[k][1]) < 1e-6
-            assert abs(got[k][2] - exp[k][2]) < 1e-9
-
-        # TopK vs batch
-        exp_topk = [
-            (r["event_type"], r["cnt"])
-            for r in ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("event_type")).limit(3).collect()
-        ]
-        got_topk = [(k["event_type"], c) for k, c in handles["topk"].sink.batches[-1]]
-        assert got_topk == exp_topk
-
-        # CDF vs compiled batch plan
-        from bullet_spark_spark.plans import compile_query
-
-        exp_cdf = [
-            (r["bucket"], r["cum_count"])
-            for r in compile_query(spark, specs["cdf"]).collect()
-        ]
-        assert handles["cdf"].sink.batches[-1] == exp_cdf
-
-        # RAW vs batch filter
-        exp_raw = sorted(
-            r["event_id"]
-            for r in ev.filter((F.col("value") > 99) & (F.col("event_type") == "error"))
-            .select("event_id").collect()
-        )
-        idx = handles["raw"].sink.columns.index("event_id")
-        got_raw = sorted(r[idx] for r in handles["raw"].sink.rows)
-        assert got_raw == exp_raw
-
-        # COUNT DISTINCT vs batch exact
-        exp_cd = (
-            ev.filter(F.col("value") > 50)
-            .select("user_id").distinct().filter(F.col("user_id").isNotNull())
-            .count()
-        )
-        assert handles["cd"].sink.batches[-1] == [(exp_cd,)]
-
-        # QUANTILE vs batch-side linear-histogram targeted rank
-        import math
-
-        vals = sorted(
-            r["value"]
-            for r in ev.filter(
-                (F.col("event_type") == "view") & F.col("value").isNotNull()
-            ).select("value").collect()
-        )
-        counts: dict[int, int] = {}
-        for v in vals:
-            counts[math.floor(v / 5.0)] = counts.get(math.floor(v / 5.0), 0) + 1
-        exp_q = []
-        for p in (0.5, 0.9):
-            rank, run = max(1, math.ceil(p * len(vals))), 0
-            for b in sorted(counts):
-                run += counts[b]
-                if run >= rank:
-                    exp_q.append((p, (b + 0.5) * 5.0))
-                    break
-        assert handles["qnt"].sink.batches[-1] == exp_q
-    finally:
-        rt.stop_all()
-
-
-def test_multiplexer_raw_limit_completes(spark, tables, tmp_path):
-    """A multiplexed RAW query stops at its limit and is marked COMPLETED by
-    the sweeper without stopping the shared stage."""
-    from bullet_spark_spark.plans.spec import RawAgg
-
-    rt = EngineRuntime(spark, sweep_interval_s=0.3)
-    try:
-        stream = file_drip(spark, tables["events"], str(tmp_path), chunks=8)
-        specs = {
-            "raw5": Query(source="events", aggregation=RawAgg(limit=5)),
-            "grp": Query(source="events", aggregation=GroupAgg(fields=["event_type"])),
-        }
-        handles = rt.register_multiplexed(specs, stream, trigger_ms=150)
-        deadline = time.time() + 60
-        while handles["raw5"].state is QueryState.RUNNING and time.time() < deadline:
-            time.sleep(0.2)
-        assert handles["raw5"].state is QueryState.COMPLETED
-        assert len(handles["raw5"].sink.rows) == 5
-        assert handles["grp"].is_active()  # shared stage survives
-    finally:
-        rt.stop_all()
-
-
-def test_multiplexer_rate_limit_fail(spark, tables, tmp_path):
-    """W9 on the static multiplexer: a query exceeding the stage's emit
-    budget is FAILed by the sweeper (error → FAIL signal for that handle) —
-    two-stage rate enforcement parity (FilterStreaming.scala:129-133,
-    JoinStreaming.scala:152-159)."""
-    from bullet_spark_spark.streaming.runtime import RateLimit, Signal
-
-    rt = EngineRuntime(spark, sweep_interval_s=0.3)
-    try:
-        stream = file_drip(spark, tables["events"], str(tmp_path), chunks=8)
-        specs = {
-            "throttled": Query(
-                source="events",
-                aggregation=GroupAgg(fields=["event_type"]),
-            ),
-            "grp": Query(source="events", aggregation=GroupAgg(fields=[])),
-        }
-        handles = rt.register_multiplexed(
-            specs,
-            stream,
-            trigger_ms=100,
-            rate_limit=RateLimit(max_emits=2, interval_ms=60_000),
-        )
-        deadline = time.time() + 60
-        while handles["throttled"].state is QueryState.RUNNING and time.time() < deadline:
-            time.sleep(0.2)
-        assert handles["throttled"].state is QueryState.FAILED
-        assert "rate limit" in (handles["throttled"].error or "")
-        assert ("throttled", Signal.FAIL) in [
-            (q, s) for q, s, _ in rt.status_log
-        ]
-    finally:
-        rt.stop_all()
-
-
-def test_multiplexed_approx_count_distinct(spark, tables, tmp_path):
-    """Approx COUNT DISTINCT in the STATIC multiplexer: one HLL blob per
-    batch rides the shared partial aggregation (empty key map — the
-    query's state is the blob, not the key set), blobs append across
-    batches, one hll_union_agg job finalizes. Sparse-mode HLL is exact at
-    the fixture's cardinality, so the estimate must equal the exact-CD
-    answer running alongside in the same shared stage."""
-    from bullet_spark_spark.functions.exprs import E
-    from bullet_spark_spark.plans.spec import CountDistinctAgg, GroupAgg, Query
-    from bullet_spark_spark.sources.streaming import file_drip
-    from bullet_spark_spark.streaming import EngineRuntime
-
-    ev = tables["events"]
-    rt = EngineRuntime(spark)
-    specs = {
-        "acd": Query(
-            source="events",
-            filter=E.f("value") > 50,
-            aggregation=CountDistinctAgg(fields=["user_id"], approx=True),
-        ),
-        "ecd": Query(
-            source="events",
-            filter=E.f("value") > 50,
-            aggregation=CountDistinctAgg(fields=["user_id"]),
-        ),
-        "g": Query(
-            source="events",
-            aggregation=GroupAgg(
-                fields=["event_type"], operations=[(AggOp.COUNT, None, "n")]
-            ),
-        ),
-    }
-    stream = file_drip(spark, ev, str(tmp_path), chunks=4)
-    handles = rt.register_multiplexed(
-        specs, stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True
-    )
-    rt.stop_all()
-
-    exact = ev.filter(F.col("value") > 50).select("user_id").distinct().count()
-    final_ecd = handles["ecd"].sink.batches[-1]
-    final_acd = handles["acd"].sink.batches[-1]
-    assert final_ecd == [(exact,)]
-    assert final_acd == [(exact,)]

@@ -293,24 +293,32 @@ def test_scalar_subqueries_never_rescan_base(spark, qs):
 
 def test_multiplex_partials_hll_rides_shared_aggregation(spark, tables):
     from bullet_spark_spark.functions.exprs import E
-    from bullet_spark_spark.operators.multiplex import multiplex_partials
     from bullet_spark_spark.plans.spec import CountDistinctAgg, GroupAgg, Query
     from bullet_spark_spark.plans.spec import AggOp as _Op
+    from bullet_spark_spark.streaming.dynamic import DynamicMultiplexer
 
-    specs = {
-        "acd": Query(
+    mux = DynamicMultiplexer(spark)
+    mux.register(
+        "acd",
+        Query(
             source="events",
             filter=E.f("value") > 50,
             aggregation=CountDistinctAgg(fields=["user_id"], approx=True),
         ),
-        "g": Query(
+    )
+    mux.register(
+        "g",
+        Query(
             source="events",
             aggregation=GroupAgg(
                 fields=["event_type"], operations=[(_Op.COUNT, None, "n")]
             ),
         ),
-    }
-    plan = _plan(multiplex_partials(tables["events"], specs))
+    )
+    live = [(h, h.spec) for h in mux.queries.values()]
+    agg_compiled, _raw = mux._compile_live(live)
+    frame, _gid = DynamicMultiplexer._agg_frame(tables["events"], agg_compiled)
+    plan = _plan(frame)
     tree = _tree(plan)
     # the HLL blob is ONE MORE aggregate buffer in the one shared
     # aggregation — one scan, one shuffle for both queries

@@ -144,3 +144,30 @@ def test_spearman_matches_literal_rank_reference(spark, tables):
     vy = sum((b - my) ** 2 for b in ys)
     ref = cov / (vx**0.5 * vy**0.5)
     assert rho == pytest.approx(ref, abs=1e-6)
+
+
+@pytest.mark.parametrize("kind", ["date", "timestamp"])
+def test_rank_tests_on_date_and_timestamp_columns(spark, tables, kind):
+    """DATE and TIMESTAMP order columns do not cast to double; the lazy
+    bounds bucket them by their order-preserving integer encodings
+    (unix_date / unix_micros). KS and Mann-Whitney on the temporal column
+    must equal the same tests on that encoding (both are rank-only)."""
+    from pyspark.sql.types import DateType, TimestampType
+
+    from bullet_spark_spark.operators import distribution as dist
+
+    if kind == "date":
+        t = F.to_date("ts")
+        enc, dtype = F.unix_date(t), DateType
+    else:
+        t = F.col("ts").cast("timestamp")
+        enc, dtype = F.unix_micros(t), TimestampType
+    frame = tables["events"].select(
+        (F.col("event_type") == "view").alias("g"), t.alias("t"), enc.alias("e")
+    )
+    assert isinstance(frame.schema["t"].dataType, dtype)
+    a, b = frame.filter(F.col("g")), frame.filter(~F.col("g"))
+    for test in (dist.ks_two_sample, dist.mann_whitney_u):
+        got = test(a, b, "t").collect()
+        assert got == test(a, b, "e").collect(), test.__name__
+        assert got[0]["n_a"] > 0 and got[0]["n_b"] > 0

@@ -3,8 +3,8 @@
 bullet attaches sketch metadata to every sketch-estimated result — whether
 the value was estimated plus standard-deviation error bounds around the
 estimate [D]. These tests pin the HLL meta envelope's math, its presence on
-APPROX COUNT DISTINCT results in BOTH multiplexers, its absence on exact
-results, the control-plane RESULT event carrying it, and a tolerance check
+APPROX COUNT DISTINCT results in the shared-scan multiplexer, its absence
+on exact results, the control-plane RESULT event carrying it, and a tolerance check
 that the true cardinality sits inside the published 3-sigma bounds.
 """
 
@@ -20,7 +20,6 @@ from bullet_spark_spark.operators.sketch import HLL_DEFAULT_LGK, hll_result_meta
 from bullet_spark_spark.plans.spec import AggOp, CountDistinctAgg, GroupAgg, Query
 from bullet_spark_spark.sources.streaming import file_drip
 from bullet_spark_spark.sql import bql_result
-from bullet_spark_spark.streaming import EngineRuntime
 from bullet_spark_spark.streaming.dynamic import DynamicMultiplexer
 
 
@@ -70,6 +69,15 @@ def test_dynamic_mux_approx_cd_carries_meta(spark, tables, tmp_path):
             aggregation=CountDistinctAgg(fields=["user_id"]),
         ),
     )
+    mux.register(
+        "g",
+        Query(
+            source="events",
+            aggregation=GroupAgg(
+                fields=["event_type"], operations=[(AggOp.COUNT, None, "n")]
+            ),
+        ),
+    )
     stream = file_drip(spark, ev, str(tmp_path), chunks=2)
     mux.start(stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True)
 
@@ -77,37 +85,10 @@ def test_dynamic_mux_approx_cd_carries_meta(spark, tables, tmp_path):
     (est,) = mux.queries["acd"].result()[0]
     _check_meta(mux.queries["acd"].meta, exact)
     assert mux.queries["acd"].meta["estimate"] == est
-    # exact CD: no sketch meta
-    mux.queries["ecd"].result()
-    assert mux.queries["ecd"].meta is None
-
-
-def test_static_mux_approx_cd_carries_meta(spark, tables, tmp_path):
-    ev = tables["events"]
-    rt = EngineRuntime(spark)
-    specs = {
-        "acd": Query(
-            source="events",
-            filter=E.f("value") > 50,
-            aggregation=CountDistinctAgg(fields=["user_id"], approx=True),
-        ),
-        "g": Query(
-            source="events",
-            aggregation=GroupAgg(
-                fields=["event_type"], operations=[(AggOp.COUNT, None, "n")]
-            ),
-        ),
-    }
-    stream = file_drip(spark, ev, str(tmp_path), chunks=2)
-    handles = rt.register_multiplexed(
-        specs, stream, checkpoint_dir=str(tmp_path / "ck"), available_now=True
-    )
-    rt.stop_all()
-    exact = ev.filter(F.col("value") > 50).select("user_id").distinct().count()
-    (est,) = handles["acd"].sink.batches[-1][0]
-    _check_meta(handles["acd"].meta, exact)
-    assert handles["acd"].meta["estimate"] == est
-    assert handles["g"].meta is None  # exact aggregation: no sketch meta
+    # exact CD and exact aggregation: no sketch meta
+    for qid in ("ecd", "g"):
+        mux.queries[qid].result()
+        assert mux.queries[qid].meta is None
 
 
 def test_control_plane_result_carries_meta(spark, tables, tmp_path):

@@ -19,7 +19,6 @@ QUERIES = {
     "window_tumbling_10m": "event-time bucketing inside the aggregate, 2 exchanges total",
     "tpch_q1_pricing": "6-column pruned scan of a 11-column table + pushed date filter",
     "global_topk_orders": "TakeOrderedAndProject — per-partition heap, never a full sort",
-    "multiplex_one_pass": "ONE scan feeding 3 queries' predicates (explode of match array)",
     "sim_cosine_topk": "norms precomputed per side; broadcast query vectors",
     "dedup_minhash_lsh": "signature frame persisted; band join keyed by (band, hash)",
     "bql_group_having": "BQL text -> same partial/final HashAggregate plan as the spec API",

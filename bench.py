@@ -506,7 +506,11 @@ def _control_plane_rate(
 
     from bullet_spark_spark.sources.batch import load_table
     from bullet_spark_spark.sources.streaming import file_drip
-    from bullet_spark_spark.streaming.control import ControlPlane, submit_query
+    from bullet_spark_spark.streaming.control import (
+        ControlPlane,
+        FileLogTransport,
+        submit_query,
+    )
     from bullet_spark_spark.streaming.dynamic import DynamicMultiplexer
 
     events = load_table(spark, "events", SF_DIR)
@@ -524,7 +528,8 @@ def _control_plane_rate(
         with tempfile.TemporaryDirectory() as work:
             mux = DynamicMultiplexer(spark)
             plane = ControlPlane(
-                spark, mux, f"{work}/control", f"{work}/status.jsonl",
+                spark, mux,
+                FileLogTransport(f"{work}/control", f"{work}/status.jsonl"),
                 poll_interval_s=0.05,
             )
             plane.start()

@@ -17,7 +17,7 @@ Three quantile strategies, chosen by data volume:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -100,21 +100,6 @@ def exact_quantiles_distributed(
         a, b = rank_vals[lo], rank_vals[hi]
         rows.append((p, a + (b - a) * frac))
     return spark.createDataFrame(rows, "quantile double, value double")
-
-
-def pmf_buckets(df: DataFrame, col: str, points: list[float]) -> DataFrame:
-    """Histogram counts per bucket: one pass, one shuffle keyed by bucket —
-    see plans.compiler._compile_distribution (shared semantics)."""
-    from functools import reduce
-
-    c = F.col(col)
-    bucket = reduce(lambda acc, p: acc + F.when(c >= F.lit(p), 1).otherwise(0), points, F.lit(0))
-    return (
-        df.filter(c.isNotNull())
-        .groupBy(bucket.alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy("bucket")
-    )
 
 
 _ASINH_SCALE = 256.0  # ~0.4% relative bucket width across the double line

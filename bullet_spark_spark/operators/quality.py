@@ -279,14 +279,6 @@ def row_fingerprint(cols: list[str]) -> Column:
     return F.md5(F.concat(*parts))
 
 
-def oracle_row_fingerprint_sql(col_sqls: list[str]) -> str:
-    """The DuckDB expression matching :func:`row_fingerprint`."""
-    joined = " || chr(31) || ".join(
-        f"coalesce(CAST({c} AS VARCHAR), chr(0))" for c in col_sqls
-    )
-    return f"md5({joined})"
-
-
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,

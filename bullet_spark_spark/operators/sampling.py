@@ -491,14 +491,6 @@ def shard_and_order(
     return out.withColumn("pos", F.row_number().over(w))
 
 
-def oracle_shard_sql(key_sql: str, n_shards: int, seed: int = 0) -> str:
-    """DuckDB expression matching :func:`hash32` mod ``n_shards``."""
-    return (
-        f"(('0x' || substr(md5(CAST({key_sql} AS VARCHAR) || ':{seed}'), 1, 8))"
-        f"::BIGINT % {n_shards})"
-    )
-
-
 def token_budget_plan(
     df: DataFrame,
     source_col: str,

@@ -295,36 +295,15 @@ def _hyperplanes(num_planes: int, dim: int, seed: int = 42) -> list[list[float]]
     return planes
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature: bit i = sign(dot(plane_i, v)).
-    Compiled to a single integer column expression."""
-    bits = []
-    for i, plane in enumerate(planes):
-        plane_arr = F.array(*[F.lit(x) for x in plane])
-        bits.append(F.when(dot(plane_arr, vec) >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
-
-
-def _bucket_array(vec: Column, tables: list[list[list[float]]]) -> Column:
-    """Array of per-table bucket signatures for multi-table LSH (column-
-    expression form — kept for parity tests; the hot path is
-    :func:`_bucket_array_udf`)."""
-    return F.array(*[lsh_signature(vec, planes) for planes in tables])
-
-
 def _bucket_array_udf(tables: list[list[list[float]]]):
     """Vectorized multi-table signature: ONE ``X @ P.T`` per Arrow batch.
 
-    The expression form evaluates tables×planes interpreted fold-dots per
-    row (HOF lambdas don't codegen — each 64-dim dot is 64 interpreted
-    steps; at 8 tables × 8 planes that's 4k steps/row, measured as
-    essentially the whole cost of lsh_ann_topk). Same planes, same
-    float64 math, same ``bit i = sign(plane_i · v)`` packing — only the
-    evaluation is batched. Returns a pandas_udf producing ``array<long>``
-    of per-table signatures."""
+    A column-expression form would evaluate tables×planes interpreted
+    fold-dots per row (HOF lambdas don't codegen — each 64-dim dot is 64
+    interpreted steps; at 8 tables × 8 planes that's 4k steps/row, measured
+    as essentially the whole cost of lsh_ann_topk). Each table's signature
+    packs ``bit i = sign(plane_i · v)`` in float64. Returns a pandas_udf
+    producing ``array<long>`` of per-table signatures."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 

@@ -159,13 +159,6 @@ def word_ngrams(text: Column, n: int) -> Column:
     )
 
 
-def unique_word_ratio(text: Column) -> Column:
-    """distinct words / words — low values flag boilerplate/repetition
-    (Gopher-style quality filter). Pure array expression, zero shuffle."""
-    toks = tokens(text)
-    return F.when(F.size(toks) > 0, F.size(F.array_distinct(toks)) / F.size(toks))
-
-
 def _distinct_count_sorted(arr: Column) -> Column:
     """Distinct-element count via array_sort + one linear transition fold —
     the same O(n log n) trick as _modal_run_length below. array_distinct
@@ -222,16 +215,6 @@ def _modal_run_length(arr: Column) -> Column:
         )
 
     return F.aggregate(srt, init, step).getField("best")
-
-
-def top_ngram_fraction(text: Column, n: int = 2) -> Column:
-    """Fraction of n-grams equal to the single most frequent n-gram (modal
-    n-gram share — Gopher's "top n-gram fraction"). Pure array expression,
-    ZERO shuffle: sort + longest-equal-run per document. For book-length
-    outliers prefer the explode+groupBy form (one (doc, gram) shuffle) as
-    in repetition_metrics(explode=True)."""
-    grams = word_ngrams(text, n)
-    return F.when(F.size(grams) > 0, _modal_run_length(grams) / F.size(grams))
 
 
 def repetition_metrics(

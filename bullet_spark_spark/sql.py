@@ -6,14 +6,13 @@ BulletSparkStreamingBaseJobTest.scala:40-41 ships serialized ``Query``
 objects, never text). In a Spark-first engine the equivalent stance is:
 Spark SQL *is* the query language — every registered source is a view, so a
 BQL-style text query is just ``spark.sql`` against them, batch or streaming.
-This module is the thin facade that keeps that contract explicit, plus spec
-round-tripping for programmatic clients."""
+This module is the thin facade that keeps that contract explicit, plus the
+BQL front door (``bql``, ``bql_result``)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bullet_spark_spark.plans.spec import Query
 from bullet_spark_spark.plans.compiler import compile_query
 
 
@@ -21,11 +20,6 @@ def sql(spark: SparkSession, text: str) -> DataFrame:
     """Run a text query over the registered source views (batch; a streaming
     view produces an unbounded DataFrame to hand to EngineRuntime)."""
     return spark.sql(text)
-
-
-def run_spec(spark: SparkSession, spec: Query) -> DataFrame:
-    """Programmatic spec → DataFrame (the bullet-core Query POJO analogue)."""
-    return compile_query(spark, spec)
 
 
 def bql(spark: SparkSession, text: str, df: DataFrame | None = None) -> DataFrame:

@@ -10,14 +10,12 @@ all stages drop state). The transport itself is config-selected
 (bullet_spark_defaults.yaml:94-97) — the same pluggability lives here as
 ``ControlTransport`` implementations:
 
-- ``FileLogTransport`` — an append-only JSON-lines log as the bus
-  (offset-ordered line-delimited JSON, the Kafka-topic shape). The default,
-  and the one exercised end-to-end in tests.
-- ``KafkaTransport`` — the same handler interface over a real Kafka
-  consumer/producer (kafka-python, imported lazily; construct via
-  ``kafka_control_plane``). Client factories are injectable so the glue is
-  testable without a broker; the live test skips when kafka-python or a
-  broker is absent.
+- ``FileLogTransport`` — append-only JSON-lines files as the bus
+  (offset order within each control file, files read in name order).
+- ``HttpTransport`` (streaming.http_control) — the reference's default
+  in-memory REST pubsub, served by ``RestPubSubServer``.
+
+``ControlPlane`` takes its bus as one ``ControlTransport`` argument.
 
 Message schema (transport-agnostic, pinned by the interface-conformance
 test): control messages are either a submission ``{"id": ..., "bql":
@@ -39,7 +37,7 @@ Restart recovery: a new ``ControlPlane`` over an existing bus replays the
 control log from offset 0 (the reference recovers its whole DAG including
 registered queries from checkpoint, BulletSparkStreamingBaseJob.scala:30-38
 ``getOrCreate``). Replay semantics: queries whose terminal SIGNAL already
-exists on the status topic are NOT re-registered and their terminal events
+exists on the status log are NOT re-registered and their terminal events
 are NOT re-emitted; still-running queries re-register and resume.
 """
 
@@ -62,7 +60,7 @@ class ControlTransport:
     """The pluggable bus: poll control messages in, emit status events out.
 
     Implementations must return control messages in offset order (per
-    partition/file) from ``poll`` and publish JSON-serializable status
+    control file) from ``poll`` and publish JSON-serializable status
     events from ``emit``. ``replay_status`` returns every status event
     published so far (used for restart recovery); transports that cannot
     replay may return []."""
@@ -81,7 +79,7 @@ class ControlTransport:
 
 
 class FileLogTransport(ControlTransport):
-    """Append-only JSON-lines control/status logs (Kafka-topic shape)."""
+    """Append-only JSON-lines control/status logs."""
 
     def __init__(self, control_dir: str, status_path: str) -> None:
         self.control_dir = control_dir
@@ -120,291 +118,24 @@ class FileLogTransport(ControlTransport):
         return read_status(self.status_path)
 
 
-class KafkaTransport(ControlTransport):
-    """The same handler interface over a real Kafka consumer/producer.
-
-    Control messages are consumed from ``query_topic`` (earliest offset, so
-    a restarted plane replays the full registration history — the recovery
-    contract above), status events are produced to ``status_topic``, and
-    ``replay_status`` drains the status topic from the beginning through a
-    throwaway consumer so the replayed registrations dedupe against
-    already-terminal queries exactly as on the file transport.
-    ``consumer_factory``/``producer_factory``/``status_replay_factory``
-    default to kafka-python clients and are injectable for tests; with
-    injected clients and no ``status_replay_factory``, replay returns []
-    (recovery off).
-
-    ORDERING CONTRACT: Kafka guarantees offset order only WITHIN a
-    partition, so a multi-partition control topic may interleave messages
-    across partitions (unlike FileLogTransport, which is totally ordered).
-    The ControlPlane registry is insensitive to that interleaving:
-    submissions dedupe by query id (first consumed wins; duplicate
-    submissions of one id must carry the same BQL — retries, not
-    redefinitions), and a KILL consumed before its submission defers until
-    the submission lands (registered-then-killed, never lost). For strict
-    per-query ordering, produce control messages KEYED BY QUERY ID —
-    Kafka then routes every message of one query to one partition — or
-    use a single-partition control topic. Pinned by
-    test_kafka_interleaved_partitions_*."""
-
-    def __init__(
-        self,
-        bootstrap_servers: str,
-        query_topic: str = "bullet.queries",
-        status_topic: str = "bullet.status",
-        poll_timeout_ms: int = 100,
-        consumer_factory=None,
-        producer_factory=None,
-        status_replay_factory=None,
-    ) -> None:
-        if consumer_factory is None or producer_factory is None:
-            try:
-                from kafka import KafkaConsumer, KafkaProducer  # type: ignore
-            except ImportError as e:  # pragma: no cover - exercised via test stub
-                raise ImportError(
-                    "KafkaTransport needs the kafka-python package (or injected "
-                    "consumer/producer factories); pip install kafka-python"
-                ) from e
-            consumer_factory = consumer_factory or (
-                lambda: KafkaConsumer(
-                    query_topic,
-                    bootstrap_servers=bootstrap_servers,
-                    auto_offset_reset="earliest",
-                    enable_auto_commit=False,
-                    consumer_timeout_ms=poll_timeout_ms,
-                )
-            )
-            producer_factory = producer_factory or (
-                lambda: KafkaProducer(bootstrap_servers=bootstrap_servers)
-            )
-            # a throwaway earliest-offset consumer on the STATUS topic: the
-            # control topic replays from offset 0, so recovery needs the
-            # already-published terminal signals too (see replay_status)
-            status_replay_factory = status_replay_factory or (
-                lambda: KafkaConsumer(
-                    status_topic,
-                    bootstrap_servers=bootstrap_servers,
-                    auto_offset_reset="earliest",
-                    enable_auto_commit=False,
-                    consumer_timeout_ms=max(poll_timeout_ms, 1000),
-                )
-            )
-        self.status_topic = status_topic
-        self.poll_timeout_ms = poll_timeout_ms
-        self._status_replay_factory = status_replay_factory
-        self._consumer = consumer_factory()
-        self._producer = producer_factory()
-
-    def poll(self) -> list[str]:
-        batches = self._consumer.poll(timeout_ms=self.poll_timeout_ms)
-        out: list[str] = []
-        # poll() returns {TopicPartition: [records]}; offset order holds
-        # within each partition, matching the file transport's per-file order
-        for records in batches.values():
-            for rec in records:
-                value = rec.value
-                out.append(value.decode("utf-8") if isinstance(value, bytes) else str(value))
-        return out
-
-    def emit(self, event: dict) -> None:
-        self._producer.send(
-            self.status_topic, json.dumps(event, default=str).encode("utf-8")
-        )
-        self._producer.flush()
-
-    def replay_status(self) -> list[dict]:
-        """Drain the status topic from the beginning (restart recovery: the
-        consumer replays the control topic from offset 0, so already-
-        published terminal signals must be replayable too — matching
-        FileLogTransport's semantics)."""
-        if self._status_replay_factory is None:
-            return []
-        consumer = self._status_replay_factory()
-        events: list[dict] = []
-        try:
-            for rec in consumer:  # stops on consumer_timeout_ms
-                value = rec.value
-                events.append(
-                    json.loads(value.decode("utf-8") if isinstance(value, bytes) else value)
-                )
-        finally:
-            consumer.close()
-        return events
-
-    def close(self) -> None:
-        self._consumer.close()
-        self._producer.close()
-
-
-class PulsarTransport(ControlTransport):
-    """The handler interface over Apache Pulsar — the reference's second
-    shipped PubSub client (pom.xml:62-63 declares both kafka-clients and
-    pulsar-client; the PubSub implementation is config-selected,
-    bullet_spark_defaults.yaml:94-97). Same contract as KafkaTransport:
-
-    - control messages consumed from ``query_topic`` via an
-      Earliest-position shared subscription, so a restarted plane replays
-      the full registration history (the recovery contract);
-    - status events produced to ``status_topic``;
-    - ``replay_status`` drains the status topic through a throwaway
-      Earliest reader (Pulsar's non-subscription read path — no consumer
-      group bookkeeping for a one-shot recovery scan).
-
-    ORDERING CONTRACT: Pulsar orders messages per partition like Kafka, so
-    the same registry insensitivity applies (dedupe-by-id, deferred KILL);
-    key control messages by query id (Pulsar routes by key hash) or use a
-    non-partitioned control topic for total order.
-
-    ``consumer_factory``/``producer_factory``/``status_reader_factory``
-    default to pulsar-client objects and are injectable for tests; with
-    injected clients and no ``status_reader_factory``, replay returns []
-    (recovery off). Poll uses ``receive(timeout)`` drained until the
-    client's TIMEOUT error — pulsar-client raises ``pulsar.Timeout`` on an
-    empty queue rather than returning None. Only that type (or
-    ``timeout_exc`` for injected clients; fallback: class-name contains
-    "Timeout") ends the drain loop — auth/deserialization/dead-consumer
-    errors re-raise instead of masquerading as an empty queue and silently
-    stalling registration ingest."""
-
-    def __init__(
-        self,
-        service_url: str,
-        query_topic: str = "bullet.queries",
-        status_topic: str = "bullet.status",
-        subscription: str = "bullet-control-plane",
-        poll_timeout_ms: int = 100,
-        consumer_factory=None,
-        producer_factory=None,
-        status_reader_factory=None,
-        timeout_exc: type[BaseException] | None = None,
-    ) -> None:
-        self._client = None
-        self._timeout_exc = timeout_exc
-        if consumer_factory is None or producer_factory is None:
-            try:
-                import pulsar  # type: ignore
-            except ImportError as e:  # pragma: no cover - exercised via test stub
-                raise ImportError(
-                    "PulsarTransport needs the pulsar-client package (or "
-                    "injected consumer/producer factories); pip install "
-                    "pulsar-client"
-                ) from e
-            client = pulsar.Client(service_url)
-            self._client = client
-            if self._timeout_exc is None:
-                # importable at __init__ time on the real client
-                self._timeout_exc = getattr(pulsar, "Timeout", None)
-            consumer_factory = consumer_factory or (
-                lambda: client.subscribe(
-                    query_topic,
-                    subscription,
-                    initial_position=pulsar.InitialPosition.Earliest,
-                )
-            )
-            producer_factory = producer_factory or (
-                lambda: client.create_producer(status_topic)
-            )
-            status_reader_factory = status_reader_factory or (
-                lambda: client.create_reader(
-                    status_topic, start_message_id=pulsar.MessageId.earliest
-                )
-            )
-        self.poll_timeout_ms = poll_timeout_ms
-        self._status_reader_factory = status_reader_factory
-        self._consumer = consumer_factory()
-        self._producer = producer_factory()
-
-    def _is_timeout(self, exc: BaseException) -> bool:
-        """True iff ``exc`` is the client's empty-queue timeout: the pinned
-        ``timeout_exc`` type when known, else (injected test clients) a
-        class-name heuristic. Anything else is a REAL consumer failure."""
-        if self._timeout_exc is not None:
-            return isinstance(exc, self._timeout_exc)
-        return "timeout" in type(exc).__name__.lower()
-
-    def poll(self) -> list[str]:
-        out: list[str] = []
-        while True:
-            try:
-                msg = self._consumer.receive(timeout_millis=self.poll_timeout_ms)
-            except Exception as e:
-                if self._is_timeout(e):
-                    break  # pulsar-client raises _pulsar.Timeout on empty queue
-                raise  # auth/deser/dead-consumer: surface, don't stall silently
-            if msg is None:
-                break
-            data = msg.data()
-            out.append(data.decode("utf-8") if isinstance(data, bytes) else str(data))
-            self._consumer.acknowledge(msg)
-        return out
-
-    def emit(self, event: dict) -> None:
-        self._producer.send(json.dumps(event, default=str).encode("utf-8"))
-
-    def replay_status(self) -> list[dict]:
-        """Drain the status topic from the beginning via a throwaway
-        Earliest reader — same restart-recovery semantics as the Kafka and
-        file transports."""
-        if self._status_reader_factory is None:
-            return []
-        reader = self._status_reader_factory()
-        events: list[dict] = []
-        try:
-            while True:
-                try:
-                    msg = reader.read_next(timeout_millis=max(self.poll_timeout_ms, 1000))
-                except Exception as e:
-                    if self._is_timeout(e):
-                        break
-                    raise
-                if msg is None:
-                    break
-                data = msg.data()
-                events.append(
-                    json.loads(data.decode("utf-8") if isinstance(data, bytes) else data)
-                )
-        finally:
-            try:
-                reader.close()
-            except Exception:
-                pass
-        return events
-
-    def close(self) -> None:
-        self._consumer.close()
-        self._producer.close()
-        if self._client is not None:
-            self._client.close()
-
-
 @dataclass
 class ControlPlane:
     """Consume a control bus, drive a DynamicMultiplexer, publish status."""
 
     spark: SparkSession
     mux: DynamicMultiplexer
-    control_dir: str | None = None
-    status_path: str | None = None
+    transport: ControlTransport
     poll_interval_s: float = 0.2
-    transport: ControlTransport | None = None
 
     _stop: threading.Event = field(default_factory=threading.Event)
     _threads: list[threading.Thread] = field(default_factory=list)
     _published: dict[str, tuple] = field(default_factory=dict)  # qid -> last rows
     _terminal_published: set[str] = field(default_factory=set)
     _recovered_terminal: set[str] = field(default_factory=set)
-    # KILLs that arrived before their submission (cross-partition
-    # transports reorder across partitions — see KafkaTransport contract):
-    # the kill applies the moment the submission lands
+    # KILLs that arrived before their submission (several control files or
+    # submitters give no order across them): the kill applies the moment
+    # the submission lands
     _killed_early: set[str] = field(default_factory=set)
-
-    def __post_init__(self) -> None:
-        if self.transport is None:
-            if self.control_dir is None or self.status_path is None:
-                raise ValueError(
-                    "ControlPlane needs either a transport or control_dir+status_path"
-                )
-            self.transport = FileLogTransport(self.control_dir, self.status_path)
 
     def start(self) -> None:
         self._recover()
@@ -423,7 +154,7 @@ class ControlPlane:
     # -- restart recovery ---------------------------------------------------
 
     def _recover(self) -> None:
-        """Seed replay semantics from the status topic: a query whose
+        """Seed replay semantics from the status log: a query whose
         terminal SIGNAL is already published must not re-register when the
         control log replays, and must not re-emit RESULT/SIGNAL (the
         reference restarts from checkpoint with query state intact,
@@ -463,11 +194,12 @@ class ControlPlane:
                 try:
                     self.mux.kill(qid)
                 except KeyError:
-                    # the registry must be insensitive to cross-partition
-                    # interleaving (a Kafka control topic orders messages
-                    # only within a partition): a KILL consumed before its
-                    # submission DEFERS — the query is killed the moment
-                    # its submission lands — instead of being lost
+                    # the registry must be insensitive to interleaving across
+                    # control files or submitters (FileLogTransport reads its
+                    # files in name order, so a KILL in a.jsonl arrives before
+                    # the submission in b.jsonl): a KILL consumed before its
+                    # submission DEFERS — the query is killed the moment its
+                    # submission lands — instead of being lost
                     self._killed_early.add(qid)
                     self._emit_status(
                         {
@@ -572,47 +304,25 @@ class ControlPlane:
         self.transport.emit({**event, "ts": time.time()})
 
 
-def kafka_control_plane(
-    spark: SparkSession,
-    mux: DynamicMultiplexer,
-    bootstrap_servers: str,
-    query_topic: str = "bullet.queries",
-    status_topic: str = "bullet.status",
-    poll_interval_s: float = 0.2,
-    **transport_kwargs,
-) -> ControlPlane:
-    """Wire the same handlers to a real Kafka consumer/producer — the
-    config-selected PubSub of the reference (bullet_spark_defaults.yaml:
-    94-97, QueryReceiver.scala:29-30). Requires kafka-python (or injected
-    client factories via ``transport_kwargs``)."""
-    transport = KafkaTransport(
-        bootstrap_servers,
-        query_topic=query_topic,
-        status_topic=status_topic,
-        **transport_kwargs,
-    )
-    return ControlPlane(spark, mux, poll_interval_s=poll_interval_s, transport=transport)
+def query_message(
+    query_id: str,
+    bql: str,
+    duration_ms: int | None = None,
+    quantile_width: float | None = None,
+) -> dict:
+    """The submission message every transport carries."""
+    msg: dict = {"id": query_id, "bql": bql}
+    if duration_ms is not None:
+        msg["duration_ms"] = duration_ms
+    if quantile_width is not None:
+        msg["quantile_width"] = quantile_width
+    return msg
 
 
-def pulsar_control_plane(
-    spark: SparkSession,
-    mux: DynamicMultiplexer,
-    service_url: str,
-    query_topic: str = "bullet.queries",
-    status_topic: str = "bullet.status",
-    poll_interval_s: float = 0.2,
-    **transport_kwargs,
-) -> ControlPlane:
-    """Wire the same handlers to a Pulsar consumer/producer — the
-    reference's other shipped PubSub client (pom.xml:62-63). Requires
-    pulsar-client (or injected client factories via ``transport_kwargs``)."""
-    transport = PulsarTransport(
-        service_url,
-        query_topic=query_topic,
-        status_topic=status_topic,
-        **transport_kwargs,
-    )
-    return ControlPlane(spark, mux, poll_interval_s=poll_interval_s, transport=transport)
+def kill_message(query_id: str) -> dict:
+    """The KILL signal message (ref Metadata.Signal.KILL feedback,
+    JoinStreaming.scala:144-158)."""
+    return {"id": query_id, "signal": "KILL"}
 
 
 def submit_query(
@@ -623,20 +333,14 @@ def submit_query(
     quantile_width: float | None = None,
 ) -> None:
     """Client-side submission helper: append a query message to the control
-    log (what an external submitter does to the query topic)."""
+    log (what an external submitter does to the query log)."""
     os.makedirs(control_dir, exist_ok=True)
-    msg: dict = {"id": query_id, "bql": bql}
-    if duration_ms is not None:
-        msg["duration_ms"] = duration_ms
-    if quantile_width is not None:
-        msg["quantile_width"] = quantile_width
-    _append(control_dir, msg)
+    _append(control_dir, query_message(query_id, bql, duration_ms, quantile_width))
 
 
 def submit_kill(control_dir: str, query_id: str) -> None:
-    """Client-side KILL signal (ref Metadata.Signal.KILL feedback,
-    JoinStreaming.scala:144-158)."""
-    _append(control_dir, {"id": query_id, "signal": "KILL"})
+    """Client-side KILL signal."""
+    _append(control_dir, kill_message(query_id))
 
 
 def _append(control_dir: str, msg: dict) -> None:

@@ -10,9 +10,9 @@ re-creates that posture with the standard library only:
 - ``RestPubSubServer`` — the web-service side: a ``ThreadingHTTPServer``
   holding two append-only in-memory logs (control messages in, status
   events out), each readable from any offset. Offset-based reads make the
-  bus REPLAYABLE, so restart recovery works exactly as on the file and
-  Kafka transports (the ControlPlane re-reads the control log from 0 and
-  dedupes against already-terminal status events).
+  bus REPLAYABLE, so restart recovery works exactly as on the file
+  transport (the ControlPlane re-reads the control log from 0 and dedupes
+  against already-terminal status events).
 - ``HttpTransport`` — a ``ControlTransport`` over that service:
   ``poll()`` GETs new control messages past the consumer offset,
   ``emit()`` POSTs a status event, ``replay_status()`` reads the status
@@ -32,7 +32,7 @@ is queries and result summaries (KB/s), never data-plane records, so a
 single service instance is the reference's own design point. The
 transport keeps one persistent connection per poll; messages are totally
 ordered by arrival (single server = single log), which is STRONGER than
-the Kafka transport's per-partition ordering.
+the file transport's per-file ordering.
 """
 
 from __future__ import annotations
@@ -43,7 +43,11 @@ import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from bullet_spark_spark.streaming.control import ControlTransport
+from bullet_spark_spark.streaming.control import (
+    ControlTransport,
+    kill_message,
+    query_message,
+)
 
 
 class RestPubSubServer:
@@ -154,7 +158,7 @@ class HttpTransport(ControlTransport):
     Poll semantics match the file transport: every call returns the
     control messages past the consumer's offset, in total arrival order.
     ``replay_status`` reads the status log from 0 so restart recovery
-    dedupes terminal queries identically across all three transports."""
+    dedupes terminal queries identically on both transports."""
 
     def __init__(self, base_url: str) -> None:
         self.base_url = base_url.rstrip("/")
@@ -173,16 +177,6 @@ class HttpTransport(ControlTransport):
         return list(resp.get("events", []))
 
 
-def http_control_plane(spark, mux, base_url: str, poll_interval_s: float = 0.2):
-    """Wire the ControlPlane handlers to a REST pubsub service — the
-    HTTP analog of ``kafka_control_plane``."""
-    from bullet_spark_spark.streaming.control import ControlPlane
-
-    return ControlPlane(
-        spark, mux, poll_interval_s=poll_interval_s, transport=HttpTransport(base_url)
-    )
-
-
 # -- client-side helpers (what an external submitter does with curl) --------
 
 
@@ -193,16 +187,15 @@ def http_submit_query(
     duration_ms: int | None = None,
     quantile_width: float | None = None,
 ) -> None:
-    msg: dict = {"id": query_id, "bql": bql}
-    if duration_ms is not None:
-        msg["duration_ms"] = duration_ms
-    if quantile_width is not None:
-        msg["quantile_width"] = quantile_width
-    _http_json("POST", f"{base_url.rstrip('/')}/api/queries", msg)
+    _http_json(
+        "POST",
+        f"{base_url.rstrip('/')}/api/queries",
+        query_message(query_id, bql, duration_ms, quantile_width),
+    )
 
 
 def http_submit_kill(base_url: str, query_id: str) -> None:
-    _http_json("POST", f"{base_url.rstrip('/')}/api/queries", {"id": query_id, "signal": "KILL"})
+    _http_json("POST", f"{base_url.rstrip('/')}/api/queries", kill_message(query_id))
 
 
 def http_read_status(base_url: str, offset: int = 0) -> list[dict]:

@@ -2,13 +2,12 @@
 ResultEmitter/ResultPublisher (ResultEmitter.scala:19-30,
 ResultPublisher.scala:78-99): instead of publishing Clip JSON through a
 PubSub broadcast singleton, results flow through ``foreachBatch`` into a
-pluggable sink; production targets (kafka/parquet) use writeStream formats
+pluggable sink; production targets use Spark's own writeStream formats
 directly."""
 
 from __future__ import annotations
 
 import threading
-from typing import Any
 
 
 class MemorySink:
@@ -39,8 +38,3 @@ class MemorySink:
         """Non-empty batch count (bullet counts window emissions)."""
         with self._lock:
             return sum(1 for b in self.batches if b)
-
-
-def parquet_sink(path: str, checkpoint: str) -> dict[str, Any]:
-    """Options bundle for a production parquet sink."""
-    return {"format": "parquet", "path": path, "checkpointLocation": checkpoint}

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from bullet_spark_spark.sources.streaming import file_drip
 from bullet_spark_spark.streaming.control import (
     ControlPlane,
+    FileLogTransport,
     read_status,
     submit_kill,
     submit_query,
@@ -35,7 +36,9 @@ def test_control_plane_e2e(spark, tables, tmp_path):
     control_dir = str(tmp_path / "control")
     status_path = str(tmp_path / "status" / "events.jsonl")
     mux = DynamicMultiplexer(spark)
-    plane = ControlPlane(spark, mux, control_dir, status_path, poll_interval_s=0.1)
+    plane = ControlPlane(
+        spark, mux, FileLogTransport(control_dir, status_path), poll_interval_s=0.1
+    )
     plane.start()
     try:
         # submit BEFORE the stream starts flowing — bullet's forward-looking
@@ -65,7 +68,10 @@ def test_control_plane_e2e(spark, tables, tmp_path):
             )
         )
         # malformed query produced an ERROR event, stream kept running
-        assert any(e["type"] == "ERROR" for e in read_status(status_path))
+        assert any(
+            e["type"] == "ERROR" and e.get("query_id") == "bad"
+            for e in read_status(status_path)
+        )
 
         # KILL over the control transport
         submit_kill(control_dir, "victim")
@@ -112,6 +118,8 @@ def test_control_plane_e2e(spark, tables, tmp_path):
             .collect()
         }
         assert got == expected
+        # every plane-emitted event carries a ts stamp
+        assert all("ts" in e for e in read_status(status_path))
     finally:
         plane.stop()
         mux.stop()
@@ -127,7 +135,9 @@ def test_control_plane_full_bql_op_set(spark, tables, tmp_path):
     control_dir = str(tmp_path / "control")
     status_path = str(tmp_path / "status" / "events.jsonl")
     mux = DynamicMultiplexer(spark)
-    plane = ControlPlane(spark, mux, control_dir, status_path, poll_interval_s=0.1)
+    plane = ControlPlane(
+        spark, mux, FileLogTransport(control_dir, status_path), poll_interval_s=0.1
+    )
     plane.start()
     ev = tables["events"]
     try:
@@ -201,7 +211,7 @@ def test_control_plane_full_bql_op_set(spark, tables, tmp_path):
 
 
 def test_control_plane_messages_are_offset_ordered(tmp_path):
-    """Client helpers append to one offset-ordered log (kafka-topic shape)."""
+    """Client helpers append to one offset-ordered log."""
     control_dir = str(tmp_path / "c")
     submit_query(control_dir, "q1", "SELECT COUNT(*) AS n FROM STREAM()")
     submit_kill(control_dir, "q1")
@@ -226,7 +236,9 @@ def test_control_plane_survives_bad_typed_message(spark, tables, tmp_path):
     status = str(tmp_path / "status.jsonl")
     os.makedirs(control_dir)
     mux = DynamicMultiplexer(spark)
-    cp = ControlPlane(spark, mux, control_dir, status, poll_interval_s=0.1)
+    cp = ControlPlane(
+        spark, mux, FileLogTransport(control_dir, status), poll_interval_s=0.1
+    )
     cp.start()
     try:
         with open(os.path.join(control_dir, "queries.jsonl"), "a") as fh:
@@ -258,7 +270,9 @@ def test_control_plane_concurrent_submit_kill_stress(spark, tables, tmp_path):
     control_dir = str(tmp_path / "control")
     status_path = str(tmp_path / "status.jsonl")
     mux = DynamicMultiplexer(spark)
-    plane = ControlPlane(spark, mux, control_dir, status_path, poll_interval_s=0.05)
+    plane = ControlPlane(
+        spark, mux, FileLogTransport(control_dir, status_path), poll_interval_s=0.05
+    )
     plane.start()
     try:
         stream = file_drip(

@@ -3,23 +3,19 @@
 The reference's PubSub layer is pluggable and config-selected
 (bullet_spark_defaults.yaml:94-97, QueryReceiver.scala:29-30); here the
 same pluggability is the ``ControlTransport`` interface. These tests pin
-the message schema on the file transport, verify the Kafka binding's glue
-with injected stub clients (no broker in this container), and pin restart
-replay semantics (BulletSparkStreamingBaseJobTest.scala:33-76 is the
-reference's checkpoint-recovery e2e)."""
+the message schema on the file transport, the registry's insensitivity to
+control-message interleaving across control files, the consumer-failure
+path, and restart replay semantics (BulletSparkStreamingBaseJobTest.scala:
+33-76 is the reference's checkpoint-recovery e2e)."""
 
 from __future__ import annotations
 
 import json
 import time
 
-import pytest
-
 from bullet_spark_spark.streaming.control import (
     ControlPlane,
     FileLogTransport,
-    KafkaTransport,
-    kafka_control_plane,
     read_status,
     submit_kill,
     submit_query,
@@ -62,9 +58,15 @@ def _conformance_scenario(transport, send_submission, send_signal):
     assert transport.poll() == []
     # late messages after a drained poll still arrive, in order
     send_submission("q2", "SELECT COUNT(*) AS n FROM STREAM()", None)
+    send_submission("q3", "SELECT QUANTILE(value, MANUAL, 0.5) FROM STREAM()", None, 5.0)
     later = [json.loads(m) for m in transport.poll()]
-    assert [m["id"] for m in later] == ["q2"]
+    assert [m["id"] for m in later] == ["q2", "q3"]
     assert "duration_ms" not in later[0]
+    assert later[1] == {
+        "id": "q3",
+        "bql": "SELECT QUANTILE(value, MANUAL, 0.5) FROM STREAM()",
+        "quantile_width": 5.0,
+    }
 
     # status emit round-trips JSON; event types are the pinned set
     for event in (
@@ -80,7 +82,9 @@ def test_file_transport_conformance(tmp_path):
     t = FileLogTransport(str(tmp_path / "c"), str(tmp_path / "status.jsonl"))
     _conformance_scenario(
         t,
-        lambda qid, bql, dur: submit_query(str(tmp_path / "c"), qid, bql, dur),
+        lambda qid, bql, dur, width=None: submit_query(
+            str(tmp_path / "c"), qid, bql, dur, width
+        ),
         lambda qid, sig: submit_kill(str(tmp_path / "c"), qid),
     )
     # file transport replays its own status log (recovery path)
@@ -89,261 +93,104 @@ def test_file_transport_conformance(tmp_path):
     assert events[2] == {"type": "SIGNAL", "query_id": "q1", "signal": "KILL", "ts": 3.0}
 
 
-# -- kafka binding glue (stub clients — no broker in this container) --------
+# -- interleaving across control files ---------------------------------------
 
 
-class _FakeRecord:
-    def __init__(self, value: bytes) -> None:
-        self.value = value
+def test_file_transport_interleaved_files_kill_defers_and_dedup_holds(spark, tmp_path):
+    """FileLogTransport reads its control files in name order, so a KILL in
+    a.jsonl is consumed BEFORE the submission it refers to in b.jsonl. The
+    registry is interleaving-insensitive: the kill defers and applies the
+    moment the submission lands (query ends KILLED, never runs unbounded),
+    and duplicate submissions of one id across files dedupe to one
+    registration."""
+    control_dir = tmp_path / "control"
+    control_dir.mkdir()
+    bql = "SELECT COUNT(*) AS n FROM STREAM() GROUP BY event_type"
 
+    def write(fname, *msgs):
+        with open(control_dir / fname, "a") as fh:
+            for m in msgs:
+                fh.write(json.dumps(m) + "\n")
 
-class _FakeConsumer:
-    def __init__(self) -> None:
-        self.pending: list[_FakeRecord] = []
-        self.closed = False
+    write("a.jsonl", {"id": "qx", "signal": "KILL"}, {"id": "qy", "bql": bql})
+    write("b.jsonl", {"id": "qx", "bql": bql}, {"id": "qy", "bql": bql})
 
-    def push(self, msg: dict) -> None:
-        self.pending.append(_FakeRecord(json.dumps(msg).encode("utf-8")))
-
-    def poll(self, timeout_ms=0):
-        if not self.pending:
-            return {}
-        batch, self.pending = self.pending, []
-        return {("topic", 0): batch}
-
-    def close(self) -> None:
-        self.closed = True
-
-
-class _FakeProducer:
-    def __init__(self) -> None:
-        self.sent: list[tuple[str, bytes]] = []
-        self.closed = False
-
-    def send(self, topic, value):
-        self.sent.append((topic, value))
-
-    def flush(self) -> None:
-        pass
-
-    def close(self) -> None:
-        self.closed = True
-
-
-def test_kafka_transport_conformance_with_stub_clients():
-    consumer, producer = _FakeConsumer(), _FakeProducer()
-    t = KafkaTransport(
-        "broker:9092",
-        status_topic="bullet.status",
-        consumer_factory=lambda: consumer,
-        producer_factory=lambda: producer,
-    )
-
-    def send_submission(qid, bql, dur):
-        msg = {"id": qid, "bql": bql}
-        if dur is not None:
-            msg["duration_ms"] = dur
-        consumer.push(msg)
-
-    _conformance_scenario(
-        t, send_submission, lambda qid, sig: consumer.push({"id": qid, "signal": sig})
-    )
-    # emits landed on the status topic as JSON bytes
-    assert [topic for topic, _ in producer.sent] == ["bullet.status"] * 4
-    assert json.loads(producer.sent[2][1])["signal"] == "KILL"
-    t.close()
-    assert consumer.closed and producer.closed
-
-
-def test_kafka_control_plane_end_to_end_with_stub_clients(spark):
-    """The full ControlPlane drives the Kafka binding exactly like the file
-    bus: submissions register, malformed input produces ERROR status, KILL
-    lands, terminal RESULT+SIGNAL publish to the status topic."""
-    consumer, producer = _FakeConsumer(), _FakeProducer()
+    status_path = str(tmp_path / "status.jsonl")
     mux = DynamicMultiplexer(spark)
-    plane = kafka_control_plane(
-        spark,
-        mux,
-        "broker:9092",
-        poll_interval_s=0.05,
-        consumer_factory=lambda: consumer,
-        producer_factory=lambda: producer,
+    qy_handles = []
+    register = mux.register
+
+    def recording_register(qid, spec, *args, **kwargs):
+        handle = register(qid, spec, *args, **kwargs)
+        if qid == "qy":
+            qy_handles.append(handle)
+        return handle
+
+    mux.register = recording_register
+    plane = ControlPlane(
+        spark, mux, FileLogTransport(str(control_dir), status_path), poll_interval_s=0.05
     )
     plane.start()
     try:
-        consumer.push(
-            {"id": "q1", "bql": "SELECT COUNT(*) AS n FROM STREAM() GROUP BY event_type"}
-        )
-        consumer.push({"id": "bad", "bql": "SELECT FROM nowhere"})
-        assert _wait_for(lambda: "q1" in mux.queries)
-
-        def status_events():
-            return [json.loads(v) for _, v in producer.sent]
-
-        assert _wait_for(
-            lambda: any(
-                e["type"] == "ERROR" and e.get("query_id") == "bad"
-                for e in status_events()
-            )
-        )
-        consumer.push({"id": "q1", "signal": "KILL"})
-        assert _wait_for(lambda: mux.queries["q1"].state is QueryState.KILLED)
-        assert _wait_for(
-            lambda: any(
-                e["type"] == "SIGNAL"
-                and e.get("query_id") == "q1"
-                and e["signal"] == "KILL"
-                for e in status_events()
-            )
-        )
-        # every event carries a ts stamp
-        assert all("ts" in e for e in status_events())
-    finally:
-        plane.stop()
-
-
-class _FakeMultiPartitionConsumer:
-    """Stub consumer with N partitions: poll returns per-partition record
-    lists, offset order preserved only WITHIN each partition — Kafka's
-    real delivery contract (a multi-partition topic interleaves)."""
-
-    def __init__(self, n_partitions: int = 2) -> None:
-        self.partitions: dict[int, list[_FakeRecord]] = {
-            i: [] for i in range(n_partitions)
-        }
-        self.closed = False
-
-    def push(self, partition: int, msg: dict) -> None:
-        self.partitions[partition].append(
-            _FakeRecord(json.dumps(msg).encode("utf-8"))
-        )
-
-    def poll(self, timeout_ms=0):
-        out = {}
-        for p, recs in self.partitions.items():
-            if recs:
-                out[("topic", p)] = recs
-                self.partitions[p] = []
-        return out
-
-    def close(self) -> None:
-        self.closed = True
-
-
-def test_kafka_interleaved_partitions_kill_defers_and_dedup_holds(spark):
-    """The ordering contract pinned (KafkaTransport docstring): with a
-    multi-partition control topic, a KILL can be consumed BEFORE the
-    submission it refers to. The registry is interleaving-insensitive —
-    the kill defers and applies the moment the submission lands (query
-    ends KILLED, never runs unbounded), and duplicate submissions of one
-    id across partitions dedupe to one registration."""
-    consumer, producer = _FakeMultiPartitionConsumer(), _FakeProducer()
-    mux = DynamicMultiplexer(spark)
-    plane = kafka_control_plane(
-        spark,
-        mux,
-        "broker:9092",
-        poll_interval_s=0.05,
-        consumer_factory=lambda: consumer,
-        producer_factory=lambda: producer,
-    )
-    plane.start()
-    try:
-        bql = "SELECT COUNT(*) AS n FROM STREAM() GROUP BY event_type"
-        # partition 0 (flattened first): the KILL; partition 1: the submission
-        consumer.push(0, {"id": "qx", "signal": "KILL"})
-        consumer.push(1, {"id": "qx", "bql": bql})
-        # a retried submission of another query on BOTH partitions
-        consumer.push(0, {"id": "qy", "bql": bql})
-        consumer.push(1, {"id": "qy", "bql": bql})
-
         assert _wait_for(
             lambda: mux.queries.get("qx") is not None
             and mux.queries["qx"].state is QueryState.KILLED
         )
-        assert _wait_for(lambda: "qy" in mux.queries)
+        assert _wait_for(lambda: len(qy_handles) == 2)
+        assert all(h is mux.queries["qy"] for h in qy_handles)
         assert mux.queries["qy"].state is QueryState.RUNNING
         # the deferred kill surfaced as a (non-fatal) notice
-        events = [json.loads(v) for _, v in producer.sent]
-        assert any(
-            e["type"] == "ERROR" and "deferred" in e.get("error", "")
-            for e in events
+        assert _wait_for(
+            lambda: any(
+                e["type"] == "ERROR"
+                and e.get("query_id") == "qx"
+                and "deferred" in e.get("error", "")
+                for e in read_status(status_path)
+            )
         )
     finally:
         plane.stop()
 
 
-def test_kafka_transport_requires_client_or_factories(monkeypatch):
-    """Without kafka-python and without injected factories the binding
-    fails with a clear ImportError naming the missing package — forced in
-    every environment by masking the kafka import."""
-    import sys
-
-    monkeypatch.setitem(sys.modules, "kafka", None)  # import kafka → ImportError
-    with pytest.raises(ImportError, match="kafka-python"):
-        KafkaTransport("broker:9092")
+# -- consumer failure ---------------------------------------------------------
 
 
-def test_kafka_transport_restart_recovery_with_stub_clients(spark):
-    """Restart recovery over the Kafka binding: replay_status drains the
-    status topic, so a replayed control topic does not re-register queries
-    whose terminal SIGNAL is already published."""
-    consumer, producer = _FakeConsumer(), _FakeProducer()
+class _FailOnceTransport(FileLogTransport):
+    """A file bus whose first poll raises, as a dead broker connection would."""
 
-    class _FakeReplayConsumer:
-        def __init__(self, records):
-            self._records = records
-            self.closed = False
+    def __init__(self, control_dir: str, status_path: str) -> None:
+        super().__init__(control_dir, status_path)
+        self.failed = False
 
-        def __iter__(self):
-            return iter(self._records)
+    def poll(self) -> list[str]:
+        if not self.failed:
+            self.failed = True
+            raise ConnectionError("bus unreachable")
+        return super().poll()
 
-        def close(self):
-            self.closed = True
 
-    terminal = {"type": "SIGNAL", "query_id": "old", "signal": "COMPLETE", "ts": 1.0}
-    replay = _FakeReplayConsumer([_FakeRecord(json.dumps(terminal).encode())])
+def test_control_plane_reports_consumer_failure_and_keeps_consuming(spark, tmp_path):
+    """A poll that raises surfaces as an ERROR status prefixed ``consumer:``
+    and does not stop the consumer loop: a later submission registers."""
+    control_dir = str(tmp_path / "control")
+    status_path = str(tmp_path / "status.jsonl")
+    transport = _FailOnceTransport(control_dir, status_path)
     mux = DynamicMultiplexer(spark)
-    plane = kafka_control_plane(
-        spark,
-        mux,
-        "broker:9092",
-        poll_interval_s=0.05,
-        consumer_factory=lambda: consumer,
-        producer_factory=lambda: producer,
-        status_replay_factory=lambda: replay,
-    )
+    plane = ControlPlane(spark, mux, transport, poll_interval_s=0.05)
     plane.start()
     try:
-        # the control topic replays from offset 0: old (terminal) + fresh
-        consumer.push({"id": "old", "bql": "SELECT COUNT(*) AS n FROM STREAM()"})
-        consumer.push({"id": "fresh", "bql": "SELECT COUNT(*) AS n FROM STREAM()"})
-        assert _wait_for(lambda: "fresh" in mux.queries)
-        assert "old" not in mux.queries  # terminal query not re-registered
-        assert replay.closed
-        # and its terminal events are not re-emitted
-        assert not any(
-            json.loads(v).get("query_id") == "old" for _, v in producer.sent
+        assert _wait_for(lambda: transport.failed)
+        assert _wait_for(
+            lambda: any(
+                e["type"] == "ERROR" and e["error"] == "consumer: bus unreachable"
+                for e in read_status(status_path)
+            )
         )
+        submit_query(control_dir, "after", "SELECT COUNT(*) AS n FROM STREAM()")
+        assert _wait_for(lambda: "after" in mux.queries)
+        assert mux.queries["after"].state is QueryState.RUNNING
     finally:
         plane.stop()
-
-
-def test_kafka_transport_live_broker():
-    """Real-broker smoke: skipped cleanly when kafka-python or a local
-    broker is absent (this container has neither)."""
-    kafka = pytest.importorskip("kafka", reason="kafka-python not installed")
-    try:
-        consumer = kafka.KafkaConsumer(
-            bootstrap_servers="localhost:9092", consumer_timeout_ms=500
-        )
-        consumer.topics()
-        consumer.close()
-    except Exception:
-        pytest.skip("no Kafka broker on localhost:9092")
-    t = KafkaTransport("localhost:9092")
-    t.emit({"type": "ERROR", "error": "smoke", "ts": 0.0})
-    t.close()
 
 
 # -- restart recovery (replay semantics) ------------------------------------
@@ -360,7 +207,9 @@ def test_control_plane_recovery(spark, tmp_path):
 
     # --- incarnation 1: one query completes, one is killed, one keeps running
     mux1 = DynamicMultiplexer(spark)
-    plane1 = ControlPlane(spark, mux1, control_dir, status_path, poll_interval_s=0.05)
+    plane1 = ControlPlane(
+        spark, mux1, FileLogTransport(control_dir, status_path), poll_interval_s=0.05
+    )
     plane1.start()
     try:
         submit_query(
@@ -386,7 +235,9 @@ def test_control_plane_recovery(spark, tmp_path):
 
     # --- incarnation 2: fresh mux + plane over the SAME logs
     mux2 = DynamicMultiplexer(spark)
-    plane2 = ControlPlane(spark, mux2, control_dir, status_path, poll_interval_s=0.05)
+    plane2 = ControlPlane(
+        spark, mux2, FileLogTransport(control_dir, status_path), poll_interval_s=0.05
+    )
     plane2.start()
     try:
         # running query resumes (re-registers from the replayed control log)

@@ -3,8 +3,8 @@
 The reference's DEFAULT query transport is an in-memory REST pubsub
 (bullet_spark_defaults.yaml:94-97; QueryReceiver.scala:29-30 opens the
 config-selected PubSub). These tests run the stdlib web service + transport
-against the same transport-conformance contract the file and Kafka
-transports pass, then a full control-plane e2e over real HTTP on
+against the same transport-conformance contract the file transport
+passes, then a full control-plane e2e over real HTTP on
 localhost: register BQL → windowed emissions → KILL → RESULT + COMPLETE,
 plus restart recovery through the service's replayable status log.
 """
@@ -23,7 +23,6 @@ from bullet_spark_spark.streaming.dynamic import DynamicMultiplexer
 from bullet_spark_spark.streaming.http_control import (
     HttpTransport,
     RestPubSubServer,
-    http_control_plane,
     http_read_status,
     http_submit_kill,
     http_submit_query,
@@ -43,7 +42,9 @@ def test_http_transport_conformance(pubsub):
     t = HttpTransport(pubsub.base_url)
     _conformance_scenario(
         t,
-        lambda qid, bql, dur: http_submit_query(pubsub.base_url, qid, bql, dur),
+        lambda qid, bql, dur, width=None: http_submit_query(
+            pubsub.base_url, qid, bql, dur, width
+        ),
         lambda qid, sig: http_submit_kill(pubsub.base_url, qid),
     )
     # the service's status log is replayable from offset 0 (recovery path)
@@ -60,7 +61,7 @@ def test_http_control_plane_end_to_end(spark, tables, pubsub, tmp_path):
     terminal RESULT + COMPLETE flow back through the web service."""
     base = pubsub.base_url
     mux = DynamicMultiplexer(spark)
-    plane = http_control_plane(spark, mux, base, poll_interval_s=0.1)
+    plane = ControlPlane(spark, mux, HttpTransport(base), poll_interval_s=0.1)
     plane.start()
     try:
         http_submit_query(
@@ -137,10 +138,10 @@ def test_http_restart_recovery(spark, pubsub):
     """A new ControlPlane over the same service replays the control log but
     must NOT re-register or re-signal queries whose terminal SIGNAL is
     already on the status log — identical recovery semantics to the file
-    and Kafka transports."""
+    transport."""
     base = pubsub.base_url
     mux1 = DynamicMultiplexer(spark)
-    plane1 = http_control_plane(spark, mux1, base, poll_interval_s=0.05)
+    plane1 = ControlPlane(spark, mux1, HttpTransport(base), poll_interval_s=0.05)
     plane1.start()
     try:
         http_submit_query(base, "done_q", "SELECT COUNT(*) AS n FROM STREAM()", 1)
@@ -161,7 +162,7 @@ def test_http_restart_recovery(spark, pubsub):
         1 for e in http_read_status(base) if e["type"] == "SIGNAL"
     )
     mux2 = DynamicMultiplexer(spark)
-    plane2 = http_control_plane(spark, mux2, base, poll_interval_s=0.05)
+    plane2 = ControlPlane(spark, mux2, HttpTransport(base), poll_interval_s=0.05)
     plane2.start()
     try:
         time.sleep(0.5)  # let the replayed control log drain

@@ -5,8 +5,6 @@
   the key count OOMs at ~1B keys);
 - temp-column collision safety in bloom_probe / cms_lookup;
 - theta_result_meta k floor (z-sigma bounds degenerate below k=12);
-- PulsarTransport poll() distinguishes timeout (empty queue) from real
-  consumer failures;
 - cosine_near_dup_pairs(exact=True) row cap (the n² crossJoin is a
   differential reference, not a production path).
 """
@@ -144,84 +142,6 @@ def test_theta_result_meta_rejects_small_k():
     meta = sk.theta_result_meta(100.0, k=16)
     for z in ("1", "2", "3"):
         assert meta["bounds"][z]["upper"] > meta["estimate"] > meta["bounds"][z]["lower"] > 0
-
-
-# ---------------------------------------------------------------------------
-# Pulsar poll: timeout vs real failure
-# ---------------------------------------------------------------------------
-
-class _Timeout(Exception):
-    pass
-
-
-class _AuthError(Exception):
-    pass
-
-
-class _Consumer:
-    def __init__(self, msgs, then_raise=None):
-        self._msgs = list(msgs)
-        self._then = then_raise
-
-    def receive(self, timeout_millis=0):
-        if self._msgs:
-            return _Msg(self._msgs.pop(0))
-        raise self._then or _Timeout("empty")
-
-    def acknowledge(self, msg):
-        pass
-
-    def close(self):
-        pass
-
-
-class _Msg:
-    def __init__(self, data):
-        self._d = data
-
-    def data(self):
-        return self._d.encode()
-
-
-class _Producer:
-    def send(self, b):
-        pass
-
-    def close(self):
-        pass
-
-
-def _transport(consumer, **kw):
-    from bullet_spark_spark.streaming.control import PulsarTransport
-
-    return PulsarTransport(
-        "pulsar://unused:6650",
-        consumer_factory=lambda: consumer,
-        producer_factory=lambda: _Producer(),
-        **kw,
-    )
-
-
-def test_pulsar_poll_drains_until_timeout():
-    t = _transport(_Consumer(["a", "b"]))
-    assert t.poll() == ["a", "b"]  # heuristic: class named *Timeout* ends drain
-
-
-def test_pulsar_poll_reraises_non_timeout_failures():
-    t = _transport(_Consumer(["a"], then_raise=_AuthError("denied")))
-    with pytest.raises(_AuthError):
-        t.poll()
-
-
-def test_pulsar_poll_pinned_timeout_type():
-    # with timeout_exc pinned, even a Timeout-named foreign error re-raises
-    class _FakeTimeout(Exception):
-        pass
-
-    t = _transport(_Consumer([], then_raise=_Timeout("empty")),
-                   timeout_exc=_FakeTimeout)
-    with pytest.raises(_Timeout):
-        t.poll()
 
 
 # ---------------------------------------------------------------------------

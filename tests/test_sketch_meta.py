@@ -99,6 +99,7 @@ def test_control_plane_result_carries_meta(spark, tables, tmp_path):
 
     from bullet_spark_spark.streaming.control import (
         ControlPlane,
+        FileLogTransport,
         read_status,
         submit_query,
     )
@@ -107,7 +108,9 @@ def test_control_plane_result_carries_meta(spark, tables, tmp_path):
     control_dir = str(tmp_path / "control")
     status_path = str(tmp_path / "status.jsonl")
     mux = DynamicMultiplexer(spark)
-    plane = ControlPlane(spark, mux, control_dir, status_path, poll_interval_s=0.05)
+    plane = ControlPlane(
+        spark, mux, FileLogTransport(control_dir, status_path), poll_interval_s=0.05
+    )
     plane.start()
     try:
         submit_query(

@@ -554,10 +554,10 @@ def _control_plane_rate(
             wall = time.perf_counter() - t0
             plane.stop()
             # count only queries that actually completed a full serve cycle —
-            # a registration stall must not inflate the reported rate
-            served = sum(
-                1 for h in mux.queries.values() if h.state.value == "COMPLETED"
-            )
+            # a registration stall must not inflate the reported rate. The
+            # final publish pass retired every finished query; its
+            # tombstone keeps the terminal state
+            served = sum(1 for s in mux.finished.values() if s.value == "COMPLETED")
         # two rates: the full serve cycle (submit -> register -> drain the
         # whole stream -> complete; bounded by DATA throughput, not control
         # capacity) and the control plane alone (submit -> parse ->

@@ -33,6 +33,12 @@ stream, specs evaluated per micro-batch, registry mutable mid-flight —
 exactly bullet's forward-looking query semantics (a query sees only records
 arriving after submission, SURVEY §0).
 
+Publication: the publisher runs a pass as soon as a micro-batch has merged
+(``DynamicMultiplexer.merged``, set at the end of every batch) and every
+``poll_interval_s`` otherwise, for the wall-clock duration sweep. Once a
+query's RESULT and SIGNAL are out it retires from the multiplexer
+(``DynamicMultiplexer.retire``), so a pass walks live queries only.
+
 Restart recovery: a new ``ControlPlane`` over an existing bus replays the
 control log from offset 0 (the reference recovers its whole DAG including
 registered queries from checkpoint, BulletSparkStreamingBaseJob.scala:30-38
@@ -129,8 +135,8 @@ class ControlPlane:
 
     _stop: threading.Event = field(default_factory=threading.Event)
     _threads: list[threading.Thread] = field(default_factory=list)
-    _published: dict[str, tuple] = field(default_factory=dict)  # qid -> last rows
-    _terminal_published: set[str] = field(default_factory=set)
+    # live qid -> last WINDOW rows (dropped when the query retires)
+    _published: dict[str, tuple] = field(default_factory=dict)
     _recovered_terminal: set[str] = field(default_factory=set)
     # KILLs that arrived before their submission (several control files or
     # submitters give no order across them): the kill applies the moment
@@ -146,6 +152,7 @@ class ControlPlane:
 
     def stop(self) -> None:
         self._stop.set()
+        self.mux.merged.set()  # wake the publisher now
         for t in self._threads:
             t.join(timeout=5)
         self._publish_once()  # flush terminal states
@@ -162,7 +169,6 @@ class ControlPlane:
         for event in self.transport.replay_status():
             if event.get("type") == "SIGNAL" and event.get("query_id"):
                 self._recovered_terminal.add(event["query_id"])
-                self._terminal_published.add(event["query_id"])
 
     # -- control consumption (the QueryReceiver loop) -----------------------
 
@@ -243,7 +249,18 @@ class ControlPlane:
     # -- status publication (the ResultPublisher/feedback loop) -------------
 
     def _publish_loop(self) -> None:
+        # a pass runs when a micro-batch has merged (the multiplexer sets
+        # ``merged`` at its end) or when poll_interval_s passes without one:
+        # the timer keeps the wall-clock duration sweep and KILL/terminal
+        # publication going while no data arrives
+        merged = self.mux.merged
         while not self._stop.is_set():
+            merged.wait(self.poll_interval_s)
+            # cleared BEFORE the pass: a batch that ends during the pass
+            # sets it again and gets a pass of its own
+            merged.clear()
+            if self._stop.is_set():
+                break
             try:
                 self._publish_once()
             except Exception as e:  # noqa: BLE001 — a dying publisher is silent data loss
@@ -251,10 +268,11 @@ class ControlPlane:
                     self._emit_status({"type": "ERROR", "error": f"publisher: {e}"})
                 except Exception:
                     pass
-            self._stop.wait(self.poll_interval_s)
 
     def _publish_once(self) -> None:
         for qid, handle in list(self.mux.queries.items()):
+            if handle.retired_at is not None:
+                continue  # terminal events already out
             # duration expiry enforced wall-clock here (sweeper role) — the
             # reference's expiry is batch-clock driven (JoinStreaming.scala:
             # 118-122) and so stalls when data stops; this does not.
@@ -285,8 +303,8 @@ class ControlPlane:
                     if meta is not None:
                         event["meta"] = meta
                     self._emit_status(event)
-            elif qid not in self._terminal_published:
-                self._terminal_published.add(qid)
+                continue
+            if qid not in self._recovered_terminal:
                 event = {"query_id": qid, "type": "RESULT", "rows": rows}
                 if meta is not None:
                     event["meta"] = meta
@@ -299,6 +317,9 @@ class ControlPlane:
                 self._emit_status(
                     {"query_id": qid, "type": "SIGNAL", "signal": signal}
                 )
+            # RESULT and SIGNAL are out: off the serving path
+            self._published.pop(qid, None)
+            self.mux.retire(handle)
 
     def _emit_status(self, event: dict) -> None:
         self.transport.emit({**event, "ts": time.time()})

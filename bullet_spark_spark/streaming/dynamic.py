@@ -21,26 +21,32 @@ Here: one scan, per-batch spec evaluation, fully dynamic registry;
 driver-side final merge (fine for bullet-sized bounded results, which is
 the reference's own constraint — results return through a message bus).
 ALL live queries run as ONE routed-aggregation job per batch: each row
-explodes to the query ids whose filter it matches, then a single aggregation
-keyed by (query_id, group keys) computes the UNION of (op, field) pairs any
-query needs — aggregate state per group is #distinct-(op,field) pairs, not
-#queries × ops; distinct group-by field sets become GROUPING SETS over
-(query_id, union of fields). One scan + one shuffle per batch regardless of
-query or field-set count, and the compiled Column tree is cached across
-batches while the registry is unchanged.
+explodes to one (query id, field-set id) pair per query whose filter it
+matches, and each group-key column keeps the row's value only where that
+field set groups by it (NULL elsewhere). A single plain aggregation keyed
+by (query_id, masked group keys) then computes the UNION of (op, field)
+pairs any query needs — aggregate state per group is #distinct-(op,field)
+pairs, not #queries × ops — and returns exactly each query's own groups:
+per-batch work is Σ selectivity rows in and Σ per-query distinct keys out,
+with no factor for the number of distinct field sets. One scan per batch
+regardless of query or field-set count; a one-partition batch runs as one
+stage with no exchange. The compiled Column tree is cached across batches
+while the registry is unchanged, a registry change rebuilds only the
+columns new queries add, and every batch ends by waking the control
+plane's publisher.
 """
 
 from __future__ import annotations
 
 import threading
 import time
+from collections import OrderedDict, deque
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bullet_spark_spark.functions.exprs import Expr
 from bullet_spark_spark.plans.spec import (
     AggOp,
     CountDistinctAgg,
@@ -87,6 +93,46 @@ def _merge_partial(op, a, b):
     return _none_safe(_MERGEABLE[op], a, b)
 
 
+def _bucket(agg: DistributionAgg) -> Column:
+    """A Distribution spec's derived group key: the linear bucket
+    floor(v/width) for QUANTILE, the point-threshold index for PMF/CDF."""
+    c = F.col(agg.field)
+    if agg.type is DistributionType.QUANTILE:
+        bucket = F.floor(c / F.lit(agg.width)).cast("long")
+    else:
+        from functools import reduce
+
+        from bullet_spark_spark.plans.compiler import _bucket_points
+
+        bucket = reduce(
+            lambda acc, p: acc + F.when(c >= F.lit(p), 1).otherwise(0),
+            _bucket_points(agg),
+            F.lit(0),
+        )
+    # a NULL value has no bucket (result() skips it), as the batch plan
+    # filters it out
+    return F.when(c.isNotNull(), bucket)
+
+
+def _shared_agg(op, fld: str | None) -> Column:
+    """One aggregate buffer of the shared aggregation."""
+    if op is _HLL:
+        cols = fld.split("\x1f")
+        key = F.concat_ws("\x1f", *[F.col(cc).cast("string") for cc in cols])
+        for cc in cols:  # a NULL component voids the tuple
+            key = F.when(F.col(cc).isNotNull(), key)
+        return F.hll_sketch_agg(key, F.lit(12))
+    if op is AggOp.COUNT:
+        return F.count(F.lit(1))
+    if op is AggOp.COUNT_FIELD:
+        return F.count(F.col(fld))
+    if op is AggOp.SUM:
+        return F.sum(F.col(fld))
+    if op is AggOp.MIN:
+        return F.min(F.col(fld))
+    return F.max(F.col(fld))  # MAX (register() rejects anything non-mergeable)
+
+
 @dataclass
 class DynamicHandle:
     query_id: str
@@ -108,6 +154,13 @@ class DynamicHandle:
     # THREAD-LOCAL and returns None on the control plane's publisher
     # thread, so result() must not rely on it
     spark: SparkSession | None = None
+    # approx COUNT DISTINCT: (#blobs unioned, estimate) — blobs only
+    # accumulate, so an unchanged count means an unchanged estimate and
+    # result() skips the union job
+    hll_estimate: tuple[int, int] | None = None
+    # set once the control plane has published the terminal RESULT and
+    # SIGNAL and the handle left the serving path (DynamicMultiplexer.retire)
+    retired_at: float | None = None
 
     def result(self) -> list[tuple]:
         """Current merged result rows, shaped per aggregation family:
@@ -131,28 +184,13 @@ class DynamicHandle:
                     x = v[0]
                     blobs.extend(x if isinstance(x, list) else [x])
                 blobs = [bytes(b) for b in blobs if b is not None]
-                if not blobs:
-                    from bullet_spark_spark.operators.sketch import hll_result_meta
-
-                    self.meta = hll_result_meta(0)
-                    return [(0,)]
-                # ONE tiny job over #batches blobs — the byte-blob combine
-                # step (JoinStreaming.scala:126 querier.combine) on
-                # DataSketches-compatible state
-                spark = self.spark or SparkSession.getActiveSession()
-                est = (
-                    spark.createDataFrame([(b,) for b in blobs], "s binary")
-                    .agg(
-                        F.hll_sketch_estimate(
-                            F.hll_union_agg(F.col("s"))
-                        ).alias("n")
-                    )
-                    .collect()[0]["n"]
-                )
+                if self.hll_estimate is None or self.hll_estimate[0] != len(blobs):
+                    self.hll_estimate = (len(blobs), self._hll_union(blobs))
                 from bullet_spark_spark.operators.sketch import hll_result_meta
 
-                self.meta = hll_result_meta(int(est))
-                return [(int(est),)]
+                est = self.hll_estimate[1]
+                self.meta = hll_result_meta(est)
+                return [(est,)]
             n = sum(
                 1 for k in self.groups if k and all(v is not None for v in k)
             )
@@ -198,18 +236,64 @@ class DynamicHandle:
             out.append((*k, *vals))
         return out
 
+    def _hll_union(self, blobs: list[bytes]) -> int:
+        """ONE tiny job over #batches blobs — the byte-blob combine step
+        (JoinStreaming.scala:126 querier.combine) on DataSketches-compatible
+        state."""
+        if not blobs:
+            return 0
+        spark = self.spark or SparkSession.getActiveSession()
+        est = (
+            spark.createDataFrame([(b,) for b in blobs], "s binary")
+            .agg(F.hll_sketch_estimate(F.hll_union_agg(F.col("s"))).alias("n"))
+            .collect()[0]["n"]
+        )
+        return int(est)
+
+
+# finished handles stay readable in ``DynamicMultiplexer.queries`` after
+# they retire until this many newer ones have (as Spark keeps its most
+# recent progress updates); retired ids keep a terminal-state tombstone up
+# to the second bound, so that a late KILL for them stays a no-op
+_RETAIN_FINISHED = 100
+_TOMBSTONES = 10_000
+_BATCH_RECORDS = 100
+
+
+@dataclass
+class BatchRecord:
+    """Where one micro-batch's serving time went (``DynamicMultiplexer.batches``)."""
+
+    epoch_id: int
+    compile_hit: bool = True
+    compile_ms: float = 0.0
+    # partition count, batch confs and the routed-aggregation DataFrame
+    frame_ms: float = 0.0
+    # aggregation job plus Arrow transfer of its partial rows
+    job_ms: float = 0.0
+    # driver merge into the handles, lock wait included
+    merge_ms: float = 0.0
+    # RAW take: job, transfer and append
+    raw_ms: float = 0.0
+    partial_rows: int = 0
+    # a one-partition batch runs as one stage; otherwise one exchange
+    single_stage: bool = False
+
+
+def _ms_since(t: float) -> float:
+    return (time.perf_counter() - t) * 1000
+
 
 class DynamicMultiplexer:
     """Per-batch query evaluation over one shared stream (add/remove live).
 
-    SINGLE-TENANT-SESSION ASSUMPTION: ``_evaluate_batch`` temporarily sets
-    session-global SQL confs (shuffle.partitions, AQE, constraint
-    propagation — restored in a ``finally``) for the duration of each
-    micro-batch, because the batch's ``foreachBatch`` DataFrame is bound to
-    this session (a ``spark.newSession()`` clone has isolated confs but
-    cannot re-plan another session's frame without re-registering it, which
-    would defeat the per-batch latency budget this exists for). Any
-    concurrent job planned on the SAME SparkSession during that window
+    SESSION CONFS: ``process_batch`` temporarily sets SQL confs
+    (shuffle.partitions, AQE, constraint propagation — restored in a
+    ``finally``) on the session the batch frame is bound to, for the
+    duration of each micro-batch. A ``foreachBatch`` frame belongs to the
+    stream's own clone of the session, so the confs stay inside the
+    stream. A frame passed in directly belongs to the caller's session: any
+    concurrent job planned on that SAME SparkSession during the batch
     inherits the batch confs. Run unrelated batch/data-plane work on its
     own session (``spark.newSession()``), or accept the multiplexer owning
     this one — the deployment posture matching the reference, where the
@@ -222,21 +306,30 @@ class DynamicMultiplexer:
         batch_shuffle_partitions: int | None = 8,
     ) -> None:
         self.spark = spark
+        # live handles, plus the most recently retired ones (retire())
         self.queries: dict[str, DynamicHandle] = {}
+        # retired id -> terminal state, oldest dropped first
+        self.finished: OrderedDict[str, QueryState] = OrderedDict()
+        self._retired: deque[DynamicHandle] = deque()
         self.status_log: list[tuple[str, Signal, float]] = []
         self.rate_limit = rate_limit  # default for every registered query
-        # reducer count for the per-batch routed-aggregation jobs. The
-        # job's OUTPUT is bounded partials (per-query groups, not data),
-        # and map-side partial aggregation collapses the batch before the
-        # exchange, so reducer fan-out buys nothing — but AQE (which would
-        # coalesce those reducers at runtime) is DISABLED inside streaming
-        # foreachBatch, so the session default (sized for data-plane
-        # shuffles) schedules dead tasks every batch: 32 reducers ≈ +90 ms
-        # per micro-batch at sf0.1 (measured). None = inherit the session
-        # conf.
+        # reducer count for the routed-aggregation job of a batch with more
+        # than one input partition (a one-partition batch needs no
+        # exchange, see process_batch). The job's OUTPUT is bounded
+        # partials (per-query groups, not data), and map-side partial
+        # aggregation collapses the batch before the exchange, so reducer
+        # fan-out buys nothing — but AQE (which would coalesce those
+        # reducers at runtime) is DISABLED inside streaming foreachBatch,
+        # so the session default (sized for data-plane shuffles) schedules
+        # dead tasks every batch: 32 reducers ≈ +90 ms per micro-batch at
+        # sf0.1 (measured). None = inherit the session conf.
         self.batch_shuffle_partitions = batch_shuffle_partitions
         self._lock = threading.Lock()
         self._stream: Any = None
+        # set at the end of every batch: the control plane's publisher
+        # waits on it, so merged partials go out at the batch boundary
+        self.merged = threading.Event()
+        self.batches: deque[BatchRecord] = deque(maxlen=_BATCH_RECORDS)
         # compiled-plan cache, keyed by the frozenset of live query ids:
         # building the conditional-agg Column tree costs ~0.35 s of py4j
         # round-trips for 32 queries (measured) — pure per-batch overhead
@@ -248,6 +341,9 @@ class DynamicMultiplexer:
         # the id set on lifecycle transitions (expiry, rate-limit fail).
         self._epoch = 0
         self._plan_cache: tuple[tuple, tuple] | None = None
+        # the key and aggregate Columns of the last compiled plan, by what
+        # they compute (see _compile_agg)
+        self._columns: dict[tuple, Column] = {}
 
     def register(
         self, query_id: str, spec: Query, rate_limit: RateLimit | None = None
@@ -299,20 +395,47 @@ class DynamicMultiplexer:
         return handle
 
     def kill(self, query_id: str) -> None:
+        """KILL a running query. A finished query — also a retired one
+        still in the tombstones — ignores it; an unknown id raises
+        KeyError."""
         with self._lock:
-            h = self.queries[query_id]
+            h = self.queries.get(query_id)
+            if h is None:
+                if query_id in self.finished:
+                    return
+                raise KeyError(query_id)
             if h.state is QueryState.RUNNING:
                 h.state = QueryState.KILLED
                 self._epoch += 1
                 self.status_log.append((query_id, Signal.KILL, time.time()))
 
+    def retire(self, handle: DynamicHandle) -> None:
+        """Take a finished handle off the serving path once its terminal
+        RESULT and SIGNAL are out (the reference drops a query's state once
+        it is done, JoinStreaming.scala:98,145,157). Its id keeps a
+        tombstone; the handle stays readable in ``queries`` until
+        ``_RETAIN_FINISHED`` newer handles have retired, and its merged
+        state goes with it."""
+        with self._lock:
+            handle.retired_at = time.time()
+            self.finished[handle.query_id] = handle.state
+            self.finished.move_to_end(handle.query_id)
+            if len(self.finished) > _TOMBSTONES:
+                self.finished.popitem(last=False)
+            self._retired.append(handle)
+            if len(self._retired) > _RETAIN_FINISHED:
+                old = self._retired.popleft()
+                if self.queries.get(old.query_id) is old:
+                    del self.queries[old.query_id]
+
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """The FilterStreaming.transformWith analogue: snapshot the registry,
-        run every live spec against this micro-batch, merge partials.
+        run every live spec against this micro-batch, merge partials, then
+        wake the publisher.
 
         ALL live queries run as ONE routed-aggregation job per micro-batch
-        (see _compile_live for the plan shape) — one scan, one shuffle per
-        batch regardless of query count or field-set count, with group keys
+        (see _compile_agg for the plan shape) — one scan per batch
+        regardless of query count or field-set count, with group keys
         keeping their native types. This is the Spark-expression form of
         the reference's 'one pass over the records for all queries'
         (FilterStreaming.scala:54-67)."""
@@ -322,21 +445,39 @@ class DynamicMultiplexer:
                 for h in self.queries.values()
                 if h.state is QueryState.RUNNING
             ]
-        if not live:
-            return
+        if live:
+            self._serve(batch_df, epoch_id, live)
+        # the batch boundary is the unit of serving latency: the publisher
+        # emits this batch's merge (and any lifecycle change) now, not on
+        # its next timer tick
+        self.merged.set()
+
+    def _serve(self, batch_df: DataFrame, epoch_id: int, live: list) -> None:
+        rec = BatchRecord(epoch_id)
+        t = time.perf_counter()
         key = (self._epoch, frozenset(h.query_id for h, _ in live))
         if self._plan_cache is not None and self._plan_cache[0] == key:
             compiled = self._plan_cache[1]
         else:
+            rec.compile_hit = False
             compiled = self._compile_live(live)
             self._plan_cache = (key, compiled)
         agg_compiled, raw_compiled = compiled
+        rec.compile_ms = _ms_since(t)
+        t = time.perf_counter()
+        # a one-partition batch (one file per trigger, the common case at
+        # serving rates) needs no exchange: coalesce(1) hands the
+        # aggregation a SinglePartition child, so Catalyst plans its partial
+        # and final halves in ONE task instead of 1 + shuffle-partition
+        # tasks. More partitions keep the exchange and its parallelism.
+        if self._num_partitions(batch_df) == 1:
+            batch_df = batch_df.coalesce(1)
+            rec.single_stage = True
         # Per-batch job confs (restored after): the routed-aggregation job's
         # output is bounded partials, its plan is a scan→explode→hash-agg
-        # with no joins — so (a) reducer fan-out buys nothing and AQE
-        # (which would coalesce it at runtime) can't: Spark disables AQE
-        # coalescing benefits inside foreachBatch and each fresh frame pays
-        # AQE's replan rounds as pure latency (~50 ms/batch measured);
+        # with no joins — so (a) reducer fan-out buys nothing, and each
+        # fresh frame would pay AQE's replan rounds as pure latency
+        # (~50 ms/batch measured);
         # (b) constraint propagation walks the 32-branch routing expression
         # for join-filter inference that can never apply (~30 ms/batch).
         # Both matter because this body runs at MICRO-BATCH cadence — per-
@@ -346,18 +487,24 @@ class DynamicMultiplexer:
             confs["spark.sql.shuffle.partitions"] = str(self.batch_shuffle_partitions)
         confs["spark.sql.adaptive.enabled"] = "false"
         confs["spark.sql.constraintPropagation.enabled"] = "false"
+        # the batch frame's own session: foreachBatch binds it to the
+        # stream's clone, where confs set on self.spark never arrive
+        conf = batch_df.sparkSession.conf
         prev: dict[str, str] = {}
         for k, v in confs.items():
-            prev[k] = self.spark.conf.get(k)
-            self.spark.conf.set(k, v)
+            prev[k] = conf.get(k)
+            conf.set(k, v)
+        rec.frame_ms = _ms_since(t)
         try:
             if agg_compiled is not None:
-                self._run_grouping_sets(batch_df, agg_compiled)
+                self._run_agg(batch_df, agg_compiled, rec)
             if raw_compiled is not None:
+                t = time.perf_counter()
                 self._run_raw(batch_df, raw_compiled)
+                rec.raw_ms = _ms_since(t)
         finally:
             for k, v in prev.items():
-                self.spark.conf.set(k, v)
+                conf.set(k, v)
         now = time.time()
         with self._lock:
             for handle, spec in live:
@@ -371,6 +518,19 @@ class DynamicMultiplexer:
                 ):
                     handle.state = QueryState.COMPLETED
                     self.status_log.append((handle.query_id, Signal.COMPLETE, now))
+        self.batches.append(rec)
+
+    @staticmethod
+    def _num_partitions(batch_df: DataFrame) -> int:
+        """Input partition count of a batch frame. ``foreachBatch`` hands
+        over a LogicalRDD over the batch's scan, whose RDD answers in about
+        1 ms; ``.rdd.getNumPartitions()`` re-plans the frame (15-50 ms per
+        batch, measured) and ``inputFiles()`` is empty on a LogicalRDD.
+        Frames from direct callers take the ``.rdd`` route."""
+        plan = batch_df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            return plan.rdd().getNumPartitions()
+        return batch_df.rdd.getNumPartitions()
 
     def _compile_live(
         self, live: list[tuple["DynamicHandle", Query]]
@@ -389,36 +549,47 @@ class DynamicMultiplexer:
         )
 
     @staticmethod
-    def _route_col(members: list[tuple["DynamicHandle", Query]]):
-        """Explode each row to the query ids whose filter it matches
-        (one array of per-query guards, prebuilt once).
+    def _route_col(
+        members: list[tuple["DynamicHandle", Query]],
+        gids: dict[str, int] | None = None,
+    ):
+        """Route each row to the queries whose filter it matches: a
+        generator (``inline``) yielding one ``__qid`` row per matching query
+        — with ``gids``, a (``__qid``, ``__gid``) row tagged with that
+        query's field-set id (one array of per-query guards, prebuilt
+        once).
 
         Fast path: render the whole routing expression as ONE SQL string
         via the expression AST's ``sql()`` (a single F.expr py4j round
-        trip). Building it node-by-node through py4j costs ~0.24 s for 32
-        queries — pure driver latency paid on EVERY registry change, the
-        dominant term of the control plane's registry-churn cost (the
-        reference re-broadcasts hundreds of queries per batch; compile
-        latency IS the serving metric). Falls back to the per-node Column
-        path for filters with no SQL text form."""
-        from bullet_spark_spark.functions.exprs import ExprSQLUnsupported
+        trip); ids are escaped SQL literals. Building it node-by-node
+        through py4j costs ~0.24 s for 32 queries — pure driver latency
+        paid on EVERY registry change, the dominant term of the control
+        plane's registry-churn cost (the reference re-broadcasts hundreds
+        of queries per batch; compile latency IS the serving metric).
+        Falls back to the per-node Column path for filters with no SQL
+        text form."""
+        from bullet_spark_spark.functions.exprs import ExprSQLUnsupported, _sql_lit
 
         try:
             parts = []
             for h, spec in members:
-                if "'" in h.query_id or "\\" in h.query_id:
-                    raise ExprSQLUnsupported("quote in query id")
                 pred = "true" if spec.filter is None else spec.filter.sql()
+                tag = f"'__qid', {_sql_lit(h.query_id)}"
+                if gids is not None:
+                    tag += f", '__gid', {gids[h.query_id]}"
                 parts.append(
-                    f"if(coalesce(({pred}), false), '{h.query_id}', null)"
+                    f"if(coalesce(({pred}), false), named_struct({tag}), null)"
                 )
-            return F.explode(F.expr(f"array_compact(array({', '.join(parts)}))"))
+            return F.inline(F.expr(f"array_compact(array({', '.join(parts)}))"))
         except ExprSQLUnsupported:
             pass
         tagged = F.array(
             *[
                 F.struct(
-                    F.lit(h.query_id).alias("qid"),
+                    F.struct(
+                        F.lit(h.query_id).alias("__qid"),
+                        *([] if gids is None else [F.lit(gids[h.query_id]).alias("__gid")]),
+                    ).alias("r"),
                     (
                         spec.filter.col() if spec.filter is not None else F.lit(True)
                     ).alias("m"),
@@ -426,27 +597,31 @@ class DynamicMultiplexer:
                 for h, spec in members
             ]
         )
-        return F.explode(
+        return F.inline(
             F.transform(
                 F.filter(tagged, lambda s: F.coalesce(s["m"], F.lit(False))),
-                lambda s: s["qid"],
+                lambda s: s["r"],
             )
         )
 
     def _compile_agg(self, live: list[tuple["DynamicHandle", Query]]) -> tuple:
-        """The shared routed-aggregation plan: each row EXPLODES to its matching
-        query ids, then ONE aggregation groups by (query_id, group keys)
-        computing the UNION of (op, field) pairs any live query needs —
-        aggregate state per group is #distinct-(op,field) pairs, not
-        #queries × ops. Distinct group-by field sets become GROUPING SETS
-        over (query_id, union of fields); a row routed to a query exists in
-        that query's field set, so group presence itself is the matched-row
+        """The shared routed-aggregation plan. Each row EXPLODES to one
+        (query id, field-set id) pair per query whose filter it matches —
+        Σ selectivity rows, not one per query. Every column of the union of
+        group keys keeps its value only on routed rows whose field set
+        groups by it and is NULL elsewhere, so ONE plain aggregation keyed
+        by (query_id, masked keys) returns exactly each query's own groups
+        (Σ per-query distinct keys), computing the UNION of (op, field)
+        pairs any query needs — aggregate state per group is
+        #distinct-(op,field) pairs, not #queries × ops. A routed row lands
+        in its query's groups, so group presence itself is the matched-row
         sentinel (a group whose agg inputs are all NULL still surfaces —
         COUNT_FIELD=0 / MIN=NULL, matching plan-per-query). TopK and exact
         CountDistinct group on their field tuple with a count; Distribution
-        specs group on a DERIVED bucket column (linear floor(v/width) for
-        QUANTILE, point thresholds for PMF/CDF). The explode emits each row
-        once per MATCHING query (Σ selectivity), not once per query."""
+        specs group on a DERIVED bucket (linear floor(v/width) for
+        QUANTILE, point thresholds for PMF/CDF), evaluated on that query's
+        rows only. Returns (route generator, masked key columns, shared
+        aggregate columns, {qid: (handle, key positions, op metadata)})."""
 
         def spec_ops(agg) -> list[tuple]:
             if isinstance(agg, GroupAgg):
@@ -457,57 +632,63 @@ class DynamicMultiplexer:
                 return [(_HLL, "\x1f".join(agg.fields), "hll")]
             return [(AggOp.COUNT, None, "count")]  # TopK / exact CD / Dist
 
-        # derived bucket columns for Distribution specs (one per query)
-        derived: list[tuple[str, object]] = []
-        key_fields: dict[str, tuple[str, ...]] = {}
-        for j, (handle, spec) in enumerate(live):
+        # Column construction is py4j round trips (about 100 ms for 29 live
+        # queries, measured), and at serving rates the registry changes
+        # nearly every batch: a recompile reuses the columns the last plan
+        # built and builds only what newly registered queries add (about
+        # 2 ms for one new query among 29)
+        prev, built = self._columns, {}
+
+        def column(key: tuple, build) -> Column:
+            if key not in built:
+                c = prev.get(key)
+                built[key] = build() if c is None else c
+            return built[key]
+
+        # each query's group keys by name — plain fields, or one derived
+        # bucket per Distribution spec — and how to build each key column
+        keys_of: dict[str, list[str]] = {}
+        builds: dict[str, tuple[tuple, Any]] = {}  # name -> (what, build)
+        for handle, spec in live:
             agg = spec.aggregation
             if isinstance(agg, DistributionAgg):
-                name = f"__bk_q{j}"
-                c = F.col(agg.field)
-                if agg.type is DistributionType.QUANTILE:
-                    bucket = F.when(
-                        c.isNotNull(), F.floor(c / F.lit(agg.width)).cast("long")
-                    )
-                else:
-                    from functools import reduce
-
-                    from bullet_spark_spark.plans.compiler import _bucket_points
-
-                    bucket = reduce(
-                        lambda acc, p: acc + F.when(c >= F.lit(p), 1).otherwise(0),
-                        _bucket_points(agg),
-                        F.lit(0),
-                    )
-                derived.append((name, bucket))
-                key_fields[handle.query_id] = (name,)
+                name = f"__bk_{handle.query_id}"
+                builds[name] = (("bucket", repr(agg)), lambda agg=agg: _bucket(agg))
+                keys_of[handle.query_id] = [name]
             elif isinstance(agg, CountDistinctAgg) and agg.approx:
-                key_fields[handle.query_id] = ()  # state is the HLL blob
+                keys_of[handle.query_id] = []  # state is the HLL blob
             else:
-                key_fields[handle.query_id] = tuple(agg.fields)
+                for f in agg.fields:
+                    builds.setdefault(f, (("col", f), lambda f=f: F.col(f)))
+                keys_of[handle.query_id] = list(agg.fields)
 
-        by_fields: dict[tuple[str, ...], list[tuple[DynamicHandle, Query]]] = {}
-        for handle, spec in live:
-            # key by MEMBERSHIP (sorted), not declaration order: GROUP BY a,b
-            # and GROUP BY b,a are the same grouping set, and emitting both
-            # would return every group twice with the same grouping_id —
-            # the merge loop would then double-count each matching query
-            by_fields.setdefault(
-                tuple(sorted(key_fields[handle.query_id])), []
-            ).append((handle, spec))
-        all_fields: list[str] = []
-        for fields in by_fields:
-            for f in fields:
-                if f not in all_fields:
-                    all_fields.append(f)
-        n = len(all_fields)
+        # field sets by MEMBERSHIP (sorted), not declaration order: GROUP BY
+        # a,b and GROUP BY b,a key the same groups
+        gids: dict[str, int] = {}
+        sets: dict[tuple[str, ...], int] = {}
+        for handle, _spec in live:
+            fields = tuple(sorted(keys_of[handle.query_id]))
+            gids[handle.query_id] = sets.setdefault(fields, len(sets))
+        key_names = list(builds)
+        key_cols = []
+        for name, (what, build) in builds.items():
+            in_sets = [g for fields, g in sets.items() if name in fields]
+            mask = tuple(in_sets) if len(in_sets) < len(sets) else None
 
-        route_col = self._route_col(live)
+            def key_col(name=name, build=build, mask=mask) -> Column:
+                c = build()
+                if mask is not None:
+                    c = F.when(F.col("__gid").isin(list(mask)), c)
+                return c.alias(name)
+
+            key_cols.append(column(("key", name, what, mask), key_col))
+
+        route_col = self._route_col(live, gids)
 
         # union of aggregate columns any query needs, computed once each;
         # AVG decomposes into its mergeable SUM + COUNT_FIELD partials
         # (finalized sink-side), sharing buffers with explicit SUM/COUNT ops
-        shared: dict[str, object] = {}
+        shared: dict[str, Column] = {}
         for _h, spec in live:
             for op, fld, _out in spec_ops(spec.aggregation):
                 needed = (
@@ -517,64 +698,29 @@ class DynamicMultiplexer:
                 )
                 for op2, fld2 in needed:
                     name = f"{getattr(op2, 'value', op2)}_{fld2 or ''}"
-                    if name in shared:
-                        continue
-                    if op2 is _HLL:
-                        cols = fld2.split("\x1f")
-                        key = F.concat_ws(
-                            "\x1f", *[F.col(cc).cast("string") for cc in cols]
+                    if name not in shared:
+                        shared[name] = column(
+                            ("agg", name),
+                            lambda op2=op2, fld2=fld2, name=name: _shared_agg(op2, fld2).alias(name),
                         )
-                        for cc in cols:  # a NULL component voids the tuple
-                            key = F.when(F.col(cc).isNotNull(), key)
-                        shared[name] = F.hll_sketch_agg(key, F.lit(12))
-                    elif op2 is AggOp.COUNT:
-                        shared[name] = F.count(F.lit(1))
-                    elif op2 is AggOp.COUNT_FIELD:
-                        shared[name] = F.count(F.col(fld2))
-                    elif op2 is AggOp.SUM:
-                        shared[name] = F.sum(F.col(fld2))
-                    elif op2 is AggOp.MIN:
-                        shared[name] = F.min(F.col(fld2))
-                    else:  # MAX (register() rejects anything non-mergeable)
-                        shared[name] = F.max(F.col(fld2))
-        shared_names = list(shared)
-        shared_exprs = [col.alias(f"a_{i}") for i, col in enumerate(shared.values())]
-        agg_pos = {name: 1 + n + i for i, name in enumerate(shared_names)}
+        self._columns = built
+        # result row: (__qid, *key_names, *shared)
+        agg_pos = {name: 1 + len(key_names) + i for i, name in enumerate(shared)}
 
-        # per-query routing: qid -> (handle, key fields, grouping_id,
-        # op metadata [(op, row position)])
-        n2 = n + 1  # grouping columns: __qid + all_fields
         plans_by_qid: dict[str, tuple] = {}
-        gsets: list[list[str]] = []
-        for fields, members in by_fields.items():
-            gsets.append(["__qid", *fields])
-            # grouping_id bitmask over (__qid, *all_fields), MSB first;
-            # __qid is in every set so its bit is always 0
-            gid = sum(
-                1 << (n2 - 1 - (1 + i))
-                for i, c in enumerate(all_fields)
-                if c not in fields
-            )
-            for handle, spec in members:
-                op_meta = [
-                    (
-                        op,
-                        (
-                            agg_pos[f"SUM_{fld}"],
-                            agg_pos[f"COUNT_FIELD_{fld}"],
-                        )
-                        if op is AggOp.AVG
-                        else agg_pos[f"{getattr(op, 'value', op)}_{fld or ''}"],
-                    )
-                    for op, fld, _ in spec_ops(spec.aggregation)
-                ]
-                plans_by_qid[handle.query_id] = (
-                    handle,
-                    key_fields[handle.query_id],
-                    gid,
-                    op_meta,
+        for handle, spec in live:
+            op_meta = [
+                (
+                    op,
+                    (agg_pos[f"SUM_{fld}"], agg_pos[f"COUNT_FIELD_{fld}"])
+                    if op is AggOp.AVG
+                    else agg_pos[f"{getattr(op, 'value', op)}_{fld or ''}"],
                 )
-        return (route_col, all_fields, n, shared_exprs, plans_by_qid, gsets, derived)
+                for op, fld, _ in spec_ops(spec.aggregation)
+            ]
+            key_pos = [1 + key_names.index(name) for name in keys_of[handle.query_id]]
+            plans_by_qid[handle.query_id] = (handle, key_pos, op_meta)
+        return (route_col, key_cols, list(shared.values()), plans_by_qid)
 
     def _compile_raw(self, live: list[tuple["DynamicHandle", Query]]) -> tuple:
         """Routed RAW collection plan: one explode over the raw specs'
@@ -620,7 +766,7 @@ class DynamicMultiplexer:
                 for x in (qid, limits[qid] - len(h.raw_rows))
             ]
         )
-        routed = batch_df.select(route_col.alias("__qid"), "*").filter(
+        routed = batch_df.select(route_col, "*").filter(
             F.col("__qid").isin(*live_now)
         )
         w = W_spark.partitionBy("__qid").orderBy(F.monotonically_increasing_id())
@@ -645,59 +791,39 @@ class DynamicMultiplexer:
                     self.status_log.append((qid, Signal.COMPLETE, now))
 
     @staticmethod
-    def _agg_frame(batch_df: DataFrame, compiled: tuple):
+    def _agg_frame(batch_df: DataFrame, compiled: tuple) -> DataFrame:
         """The shared routed-aggregation DataFrame for one batch (exposed
-        for plan-contract tests); returns (frame, single_gid_or_None)."""
-        route_col, all_fields, _n, shared_exprs, plans_by_qid, gsets, derived = compiled
-        routed = batch_df.select(
-            route_col.alias("__qid"),
-            "*",
-            *[c.alias(name) for name, c in derived],
-        )
-        if len(gsets) == 1:
-            # single field set: plain groupBy — GROUPING SETS would add an
-            # Expand operator (and grouping_id computation) for no routing
-            # benefit
-            only_gid = next(iter(plans_by_qid.values()))[2]
-            return (
-                routed.groupBy("__qid", *[F.col(c) for c in all_fields]).agg(
-                    *shared_exprs
-                ),
-                only_gid,
-            )
+        for plan-contract tests): route, then one plain aggregation keyed by
+        (query_id, masked group keys)."""
+        route_col, key_cols, agg_cols, _plans = compiled
         return (
-            routed.groupingSets(gsets, "__qid", *all_fields).agg(
-                *shared_exprs, F.grouping_id().alias("__gid")
-            ),
-            None,
+            batch_df.select(route_col, "*")
+            .groupBy(F.col("__qid"), *key_cols)
+            .agg(*agg_cols)
         )
 
-    def _run_grouping_sets(self, batch_df: DataFrame, compiled: tuple) -> None:
+    def _run_agg(self, batch_df: DataFrame, compiled: tuple, rec: BatchRecord) -> None:
         """One aggregation job for EVERY live query across all field sets."""
-        _route_col, all_fields, n, _shared_exprs, plans_by_qid, _gsets, _derived = compiled
-
-        frame, only_gid = self._agg_frame(batch_df, compiled)
-        if only_gid is not None:
-            rows = [(*r, only_gid) for r in self._collect_rows(frame)]
-        else:
-            rows = self._collect_rows(frame)
-
-        field_pos = {c: 1 + i for i, c in enumerate(all_fields)}
+        plans_by_qid = compiled[3]
+        t = time.perf_counter()
+        frame = self._agg_frame(batch_df, compiled)
+        rec.frame_ms += _ms_since(t)
+        t = time.perf_counter()
+        rows = self._collect_rows(frame)
+        rec.job_ms = _ms_since(t)
+        rec.partial_rows = len(rows)
+        t = time.perf_counter()
         # merge under the registry lock: the control-plane publisher thread
         # snapshots handle.groups concurrently, and dict insertion during
         # its iteration would raise there
         with self._lock:
             matched: set[str] = set()
             for r in rows:
-                raw = list(r)
-                entry = plans_by_qid.get(raw[0])
-                if entry is None or entry[2] != raw[-1]:
-                    continue  # row belongs to another field set's grouping
-                handle, fields, _gid, op_meta = entry
+                handle, key_pos, op_meta = plans_by_qid[r[0]]
                 matched.add(handle.query_id)
-                key = tuple(raw[field_pos[c]] for c in fields)
+                key = tuple(r[p] for p in key_pos)
                 vals = [
-                    (raw[pos[0]], raw[pos[1]]) if op is AggOp.AVG else raw[pos]
+                    (r[pos[0]], r[pos[1]]) if op is AggOp.AVG else r[pos]
                     for op, pos in op_meta
                 ]
                 cur = handle.groups.get(key)
@@ -717,7 +843,7 @@ class DynamicMultiplexer:
             # 129-133, JoinStreaming.scala:152-159): a batch that updated a
             # query's state counts as one emission
             now = time.time()
-            for handle, _fields, _gid, _meta in plans_by_qid.values():
+            for handle, _key_pos, _meta in plans_by_qid.values():
                 if (
                     handle.rate_limit is None
                     or handle.query_id not in matched
@@ -730,6 +856,7 @@ class DynamicMultiplexer:
                     handle.error = err
                     handle.state = QueryState.FAILED
                     self.status_log.append((handle.query_id, Signal.FAIL, now))
+        rec.merge_ms = _ms_since(t)
 
     def start(
         self,
@@ -745,10 +872,12 @@ class DynamicMultiplexer:
         if available_now:
             self._stream = writer.trigger(availableNow=True).start()
             self._stream.awaitTermination(timeout_s)
-            for h in self.queries.values():
-                if h.state is QueryState.RUNNING:
-                    h.state = QueryState.COMPLETED
-                    self.status_log.append((h.query_id, Signal.COMPLETE, time.time()))
+            with self._lock:
+                for h in self.queries.values():
+                    if h.state is QueryState.RUNNING:
+                        h.state = QueryState.COMPLETED
+                        self.status_log.append((h.query_id, Signal.COMPLETE, time.time()))
+            self.merged.set()
         else:
             self._stream = writer.trigger(processingTime=f"{trigger_ms} milliseconds").start()
         return self._stream

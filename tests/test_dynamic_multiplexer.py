@@ -303,10 +303,10 @@ def test_null_partial_merge(spark):
 
 
 def test_shared_fieldset_batches_into_one_job(spark, monkeypatch):
-    """ALL live queries run as ONE grouping-sets aggregation per
-    micro-batch (filters become when(pred,...) guards, field sets become
-    GROUPING SETS) — job count per batch is 1, not #queries or even
-    #distinct-fieldsets."""
+    """ALL live queries run as ONE routed aggregation per micro-batch
+    (filters become routing guards, each routed row carries its query's
+    field-set id and NULLs the keys outside that set) — job count per batch
+    is 1, not #queries or even #distinct-fieldsets."""
     from pyspark.sql.classic.dataframe import DataFrame  # concrete class in Spark 4
 
     mux = DynamicMultiplexer(spark)
@@ -336,7 +336,7 @@ def test_shared_fieldset_batches_into_one_job(spark, monkeypatch):
         DataFrame, "toArrow", lambda self: (calls.append(1), orig_arrow(self))[1]
     )
     mux.process_batch(batch, 0)
-    assert len(calls) == 1  # ["k"] sets + [] set share ONE grouping-sets job
+    assert len(calls) == 1  # ["k"] set + [] set share ONE aggregation job
     assert mux.queries["q0"].groups == {("a",): [2, 4.0], ("b",): [1, 5.0]}  # v>0
     assert mux.queries["q1"].groups == {("a",): [1, 3.0], ("b",): [1, 5.0]}  # v>2
     assert mux.queries["q2"].groups == {("b",): [1, 5.0]}  # v>4: group a absent

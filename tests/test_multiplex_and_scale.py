@@ -60,7 +60,7 @@ def test_multiplex_single_scan(spark, tables):
     for i in range(8):
         mux.register(f"q{i}", _count(E.f("value") > i * 10))
     agg_compiled, _raw = mux._compile_live([(h, h.spec) for h in mux.queries.values()])
-    frame, _gid = DynamicMultiplexer._agg_frame(tables["events"], agg_compiled)
+    frame = DynamicMultiplexer._agg_frame(tables["events"], agg_compiled)
     plan = frame._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") <= 1
 

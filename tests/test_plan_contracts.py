@@ -191,7 +191,7 @@ def test_dynamic_mux_shared_buffers_one_explode(spark, tables):
         )
     live = [(h, h.spec) for h in mux.queries.values()]
     agg_compiled, _raw = mux._compile_live(live)
-    frame, _gid = DynamicMultiplexer._agg_frame(tables["events"], agg_compiled)
+    frame = DynamicMultiplexer._agg_frame(tables["events"], agg_compiled)
     plan = _plan(frame)
     tree = _tree(plan)
     assert tree.count("Generate") == 1  # one explode routes all 16 queries
@@ -317,7 +317,7 @@ def test_multiplex_partials_hll_rides_shared_aggregation(spark, tables):
     )
     live = [(h, h.spec) for h in mux.queries.values()]
     agg_compiled, _raw = mux._compile_live(live)
-    frame, _gid = DynamicMultiplexer._agg_frame(tables["events"], agg_compiled)
+    frame = DynamicMultiplexer._agg_frame(tables["events"], agg_compiled)
     plan = _plan(frame)
     tree = _tree(plan)
     # the HLL blob is ONE MORE aggregate buffer in the one shared

@@ -35,9 +35,12 @@ arriving after submission, SURVEY §0).
 
 Publication: the publisher runs a pass as soon as a micro-batch has merged
 (``DynamicMultiplexer.merged``, set at the end of every batch) and every
-``poll_interval_s`` otherwise, for the wall-clock duration sweep. Once a
-query's RESULT and SIGNAL are out it retires from the multiplexer
-(``DynamicMultiplexer.retire``), so a pass walks live queries only.
+``poll_interval_s`` otherwise, for the wall-clock duration sweep. A pass
+asks the multiplexer what changed (``DynamicMultiplexer.take_changed``:
+the handles a merge touched or that ended since the last pass, with copies
+of their state), shapes those results outside the multiplexer's lock,
+emits a WINDOW for a changed running result and RESULT plus SIGNAL for an
+ended query, which then retires (``DynamicMultiplexer.retire``).
 
 Restart recovery: a new ``ControlPlane`` over an existing bus replays the
 control log from offset 0 (the reference recovers its whole DAG including
@@ -53,13 +56,14 @@ import json
 import os
 import threading
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import SparkSession
 
 from bullet_spark_spark.plans.bql import parse_bql
-from bullet_spark_spark.streaming.dynamic import DynamicMultiplexer
-from bullet_spark_spark.streaming.runtime import QueryState
+from bullet_spark_spark.plans.spec import DistributionAgg
+from bullet_spark_spark.streaming.dynamic import DynamicHandle, DynamicMultiplexer
+from bullet_spark_spark.streaming.runtime import _SIGNAL, QueryState
 
 
 class ControlTransport:
@@ -91,7 +95,7 @@ class FileLogTransport(ControlTransport):
         self.control_dir = control_dir
         self.status_path = status_path
         self._offsets: dict[str, int] = {}  # file -> lines consumed
-        self._status_lock = threading.Lock()
+        self._appending = threading.Lock()
         os.makedirs(control_dir, exist_ok=True)
         os.makedirs(os.path.dirname(status_path) or ".", exist_ok=True)
 
@@ -116,7 +120,7 @@ class FileLogTransport(ControlTransport):
         return out
 
     def emit(self, event: dict) -> None:
-        with self._status_lock:
+        with self._appending:
             with open(self.status_path, "a") as fh:
                 fh.write(json.dumps(event, default=str) + "\n")
 
@@ -216,24 +220,15 @@ class ControlPlane:
                     )
             return
         try:
-            from dataclasses import replace
-
             spec = parse_bql(msg["bql"])
             if msg.get("duration_ms"):
                 spec = replace(spec, duration_ms=int(msg["duration_ms"]))
-            if msg.get("quantile_width"):
+            if msg.get("quantile_width") and isinstance(spec.aggregation, DistributionAgg):
                 # mergeable linear bucketing for dynamically-multiplexed
                 # QUANTILE (an execution knob, not BQL surface): estimates
                 # land within one width of exact
-                from bullet_spark_spark.plans.spec import DistributionAgg
-
-                if isinstance(spec.aggregation, DistributionAgg):
-                    spec = replace(
-                        spec,
-                        aggregation=replace(
-                            spec.aggregation, width=float(msg["quantile_width"])
-                        ),
-                    )
+                width = float(msg["quantile_width"])
+                spec = replace(spec, aggregation=replace(spec.aggregation, width=width))
             self.mux.register(qid, spec)
             if qid in self._killed_early:
                 self._killed_early.discard(qid)
@@ -270,56 +265,33 @@ class ControlPlane:
                     pass
 
     def _publish_once(self) -> None:
-        for qid, handle in list(self.mux.queries.items()):
-            if handle.retired_at is not None:
-                continue  # terminal events already out
-            # duration expiry enforced wall-clock here (sweeper role) — the
-            # reference's expiry is batch-clock driven (JoinStreaming.scala:
-            # 118-122) and so stalls when data stops; this does not.
-            # State reads/writes and the groups snapshot happen under the
-            # multiplexer lock: foreachBatch merges partials concurrently,
-            # and iterating a dict the batch thread is inserting into
-            # raises and would kill this publisher thread.
-            with self.mux._lock:
-                if (
-                    handle.state is QueryState.RUNNING
-                    and handle.spec.duration_ms is not None
-                    and (time.time() - handle.started_at) * 1000 >= handle.spec.duration_ms
-                ):
-                    from bullet_spark_spark.streaming.runtime import Signal
-
-                    handle.state = QueryState.COMPLETED
-                    self.mux.status_log.append((qid, Signal.COMPLETE, time.time()))
-                rows = handle.result()
-            # sketch-estimated results carry bullet's meta section (estimate
-            # + std-error bounds) alongside the rows [D]; exact results
-            # leave meta unset
-            meta = getattr(handle, "meta", None)
-            if handle.state is QueryState.RUNNING:
+        for handle, state, merged in self.mux.take_changed():
+            qid = handle.query_id
+            # shaped here, off the multiplexer lock: the TopK sort, the
+            # quantile/CDF walk and the approx COUNT DISTINCT union job
+            rows = handle.result(merged)
+            if state is QueryState.RUNNING:
+                # incremental window emission (JoinStreaming.scala:148-151)
                 if rows and self._published.get(qid) != tuple(map(tuple, rows)):
-                    # incremental window emission (JoinStreaming.scala:148-151)
                     self._published[qid] = tuple(map(tuple, rows))
-                    event = {"query_id": qid, "type": "WINDOW", "rows": rows}
-                    if meta is not None:
-                        event["meta"] = meta
-                    self._emit_status(event)
+                    self._emit_rows(handle, "WINDOW", rows)
                 continue
             if qid not in self._recovered_terminal:
-                event = {"query_id": qid, "type": "RESULT", "rows": rows}
-                if meta is not None:
-                    event["meta"] = meta
-                self._emit_status(event)
-                signal = {
-                    QueryState.COMPLETED: "COMPLETE",
-                    QueryState.KILLED: "KILL",
-                    QueryState.FAILED: "FAIL",
-                }[handle.state]
-                self._emit_status(
-                    {"query_id": qid, "type": "SIGNAL", "signal": signal}
-                )
+                self._emit_rows(handle, "RESULT", rows)
+                signal = _SIGNAL[state].value
+                self._emit_status({"query_id": qid, "type": "SIGNAL", "signal": signal})
             # RESULT and SIGNAL are out: off the serving path
             self._published.pop(qid, None)
             self.mux.retire(handle)
+
+    def _emit_rows(self, handle: DynamicHandle, kind: str, rows: list) -> None:
+        event = {"query_id": handle.query_id, "type": kind, "rows": rows}
+        # sketch-estimated results carry bullet's meta section (estimate +
+        # std-error bounds) alongside the rows [D]; exact results leave it
+        # unset
+        if handle.meta is not None:
+            event["meta"] = handle.meta
+        self._emit_status(event)
 
     def _emit_status(self, event: dict) -> None:
         self.transport.emit({**event, "ts": time.time()})
@@ -341,7 +313,7 @@ def query_message(
 
 
 def kill_message(query_id: str) -> dict:
-    """The KILL signal message (ref Metadata.Signal.KILL feedback,
+    """The KILL signal message (the reference's KILL feedback metadata,
     JoinStreaming.scala:144-158)."""
     return {"id": query_id, "signal": "KILL"}
 

@@ -34,6 +34,12 @@ stage with no exchange. The compiled Column tree is cached across batches
 while the registry is unchanged, a registry change rebuilds only the
 columns new queries add, and every batch ends by waking the control
 plane's publisher.
+
+Lifecycle: only this module changes a query's state, and every query end
+(KILL, duration expiry, RAW limit, rate-limit FAIL, the end of an
+``available_now`` drain) takes one path, ``DynamicMultiplexer._end``. The
+publisher takes what changed since its last pass (``take_changed``) and
+shapes it outside the lock.
 """
 
 from __future__ import annotations
@@ -57,7 +63,13 @@ from bullet_spark_spark.plans.spec import (
     RawAgg,
     TopKAgg,
 )
-from bullet_spark_spark.streaming.runtime import QueryState, RateLimit, Signal
+from bullet_spark_spark.streaming.runtime import (
+    _SIGNAL,
+    _TOMBSTONES,
+    QueryState,
+    RateLimit,
+    Signal,
+)
 
 _MERGEABLE = {
     AggOp.COUNT: lambda a, b: a + b,
@@ -158,29 +170,28 @@ class DynamicHandle:
     # accumulate, so an unchanged count means an unchanged estimate and
     # result() skips the union job
     hll_estimate: tuple[int, int] | None = None
-    # set once the control plane has published the terminal RESULT and
-    # SIGNAL and the handle left the serving path (DynamicMultiplexer.retire)
-    retired_at: float | None = None
 
-    def result(self) -> list[tuple]:
+    def result(self, state: dict | list | None = None) -> list[tuple]:
         """Current merged result rows, shaped per aggregation family:
         GroupAgg → (keys..., ops...); TopK → (keys..., count) ranked;
         CountDistinct → [(n,)]; Distribution → (bucket, count|cum) or
-        (q, est) for QUANTILE; RAW → the collected records."""
+        (q, est) for QUANTILE; RAW → the collected records. ``state`` is a
+        copy of ``groups`` (or ``raw_rows``) taken under the multiplexer
+        lock (``DynamicMultiplexer.take_changed``); by default the handle's
+        own state is read."""
         agg = self.spec.aggregation
         if isinstance(agg, RawAgg):
-            return list(self.raw_rows)
+            return list(self.raw_rows if state is None else state)
+        groups = self.groups if state is None else state
         if isinstance(agg, TopKAgg):
-            ranked = sorted(
-                self.groups.items(), key=lambda kv: (-kv[1][0], str(kv[0]))
-            )
+            ranked = sorted(groups.items(), key=lambda kv: (-kv[1][0], str(kv[0])))
             if agg.threshold:
                 ranked = [kv for kv in ranked if kv[1][0] >= agg.threshold]
             return [(*k, v[0]) for k, v in ranked[: agg.k]]
         if isinstance(agg, CountDistinctAgg):
             if agg.approx:
                 blobs: list[bytes] = []
-                for v in self.groups.values():
+                for v in groups.values():
                     x = v[0]
                     blobs.extend(x if isinstance(x, list) else [x])
                 blobs = [bytes(b) for b in blobs if b is not None]
@@ -191,13 +202,11 @@ class DynamicHandle:
                 est = self.hll_estimate[1]
                 self.meta = hll_result_meta(est)
                 return [(est,)]
-            n = sum(
-                1 for k in self.groups if k and all(v is not None for v in k)
-            )
+            n = sum(1 for k in groups if k and all(v is not None for v in k))
             return [(n,)]
         if isinstance(agg, DistributionAgg):
             buckets = sorted(
-                (k[0], v[0]) for k, v in self.groups.items() if k[0] is not None
+                (k[0], v[0]) for k, v in groups.items() if k[0] is not None
             )
             if agg.type is DistributionType.PMF:
                 return buckets
@@ -225,7 +234,7 @@ class DynamicHandle:
         # GroupAgg: finalize AVG from its merged (sum, count) partial pair
         ops = list(agg.operations) or [(AggOp.COUNT, None, "count")]
         out = []
-        for k, v in sorted(self.groups.items(), key=lambda kv: str(kv[0])):
+        for k, v in sorted(groups.items(), key=lambda kv: str(kv[0])):
             vals = []
             for (op, _fld, _name), x in zip(ops, v):
                 if op is AggOp.AVG:
@@ -254,10 +263,18 @@ class DynamicHandle:
 # finished handles stay readable in ``DynamicMultiplexer.queries`` after
 # they retire until this many newer ones have (as Spark keeps its most
 # recent progress updates); retired ids keep a terminal-state tombstone up
-# to the second bound, so that a late KILL for them stays a no-op
+# to ``_TOMBSTONES``, so that a late KILL for them stays a no-op
 _RETAIN_FINISHED = 100
-_TOMBSTONES = 10_000
 _BATCH_RECORDS = 100
+# reducer count for the routed-aggregation job of a batch with more than
+# one input partition (a one-partition batch needs no exchange, see
+# _serve). The job's OUTPUT is bounded partials (per-query groups, not
+# data), and map-side partial aggregation collapses the batch before the
+# exchange, so reducer fan-out buys nothing — but AQE (which would coalesce
+# those reducers at runtime) is DISABLED inside streaming foreachBatch, so
+# the session default (sized for data-plane shuffles) schedules dead tasks
+# every batch: 32 reducers ≈ +90 ms per micro-batch at sf0.1 (measured).
+_BATCH_SHUFFLE_PARTITIONS = 8
 
 
 @dataclass
@@ -300,10 +317,7 @@ class DynamicMultiplexer:
     streaming harness is the application."""
 
     def __init__(
-        self,
-        spark: SparkSession,
-        rate_limit: RateLimit | None = None,
-        batch_shuffle_partitions: int | None = 8,
+        self, spark: SparkSession, rate_limit: RateLimit | None = None
     ) -> None:
         self.spark = spark
         # live handles, plus the most recently retired ones (retire())
@@ -311,36 +325,28 @@ class DynamicMultiplexer:
         # retired id -> terminal state, oldest dropped first
         self.finished: OrderedDict[str, QueryState] = OrderedDict()
         self._retired: deque[DynamicHandle] = deque()
-        self.status_log: list[tuple[str, Signal, float]] = []
+        # (id, signal, ts) of the most recent query ends
+        self.status_log: deque[tuple[str, Signal, float]] = deque(maxlen=_TOMBSTONES)
+        # handles a merge touched or that ended since the publisher's last
+        # take_changed(), keyed by identity (a re-registered id is a new
+        # handle, and the old one still owes its RESULT)
+        self._changed: dict[int, DynamicHandle] = {}
         self.rate_limit = rate_limit  # default for every registered query
-        # reducer count for the routed-aggregation job of a batch with more
-        # than one input partition (a one-partition batch needs no
-        # exchange, see process_batch). The job's OUTPUT is bounded
-        # partials (per-query groups, not data), and map-side partial
-        # aggregation collapses the batch before the exchange, so reducer
-        # fan-out buys nothing — but AQE (which would coalesce those
-        # reducers at runtime) is DISABLED inside streaming foreachBatch,
-        # so the session default (sized for data-plane shuffles) schedules
-        # dead tasks every batch: 32 reducers ≈ +90 ms per micro-batch at
-        # sf0.1 (measured). None = inherit the session conf.
-        self.batch_shuffle_partitions = batch_shuffle_partitions
         self._lock = threading.Lock()
         self._stream: Any = None
         # set at the end of every batch: the control plane's publisher
         # waits on it, so merged partials go out at the batch boundary
         self.merged = threading.Event()
         self.batches: deque[BatchRecord] = deque(maxlen=_BATCH_RECORDS)
-        # compiled-plan cache, keyed by the frozenset of live query ids:
-        # building the conditional-agg Column tree costs ~0.35 s of py4j
-        # round-trips for 32 queries (measured) — pure per-batch overhead
-        # when the registry hasn't changed between batches, which is the
-        # common case (the reference pays the same shape of cost in its
-        # per-batch re-broadcast, FilterStreaming.scala:48-53). Keyed by
-        # (registry epoch, live id set): the epoch invalidates on every
-        # register/kill (covers same-id re-registration with a new spec),
-        # the id set on lifecycle transitions (expiry, rate-limit fail).
+        # compiled-plan cache, keyed by the registry epoch, which every
+        # register and every query end bumps: building the conditional-agg
+        # Column tree costs ~0.35 s of py4j round-trips for 32 queries
+        # (measured) — pure per-batch overhead when the registry hasn't
+        # changed between batches, which is the common case (the reference
+        # pays the same shape of cost in its per-batch re-broadcast,
+        # FilterStreaming.scala:48-53)
         self._epoch = 0
-        self._plan_cache: tuple[tuple, tuple] | None = None
+        self._plan_cache: tuple[int, tuple] | None = None
         # the key and aggregate Columns of the last compiled plan, by what
         # they compute (see _compile_agg)
         self._columns: dict[tuple, Column] = {}
@@ -404,10 +410,44 @@ class DynamicMultiplexer:
                 if query_id in self.finished:
                     return
                 raise KeyError(query_id)
-            if h.state is QueryState.RUNNING:
-                h.state = QueryState.KILLED
-                self._epoch += 1
-                self.status_log.append((query_id, Signal.KILL, time.time()))
+            self._end(h, QueryState.KILLED, time.time())
+
+    def _end(self, handle: DynamicHandle, state: QueryState, now: float) -> None:
+        """The one end-of-query path (caller holds ``_lock``): a running
+        handle takes its terminal state, the status log its signal, and the
+        publisher's next ``take_changed`` the handle."""
+        if handle.state is not QueryState.RUNNING:
+            return
+        handle.state = state
+        self.status_log.append((handle.query_id, _SIGNAL[state], now))
+        self._changed[id(handle)] = handle
+        self._epoch += 1
+
+    def _expire(self, now: float) -> None:
+        """Duration expiry (caller holds ``_lock``): at every batch
+        boundary, the reference's clock (JoinStreaming.scala:118-122), and
+        on every publisher pass, so that it does not stall when data stops."""
+        for h in self.queries.values():
+            if (
+                h.spec.duration_ms is not None
+                and (now - h.started_at) * 1000 >= h.spec.duration_ms
+            ):
+                self._end(h, QueryState.COMPLETED, now)
+
+    def take_changed(self) -> list[tuple[DynamicHandle, QueryState, dict | list]]:
+        """Sweep expiry, then take every handle a merge touched or that
+        ended since the last call, with its state and a copy of its merged
+        state (RAW rows, else groups) for ``DynamicHandle.result`` to shape
+        outside the lock. A merge replaces a group's value list rather than
+        mutating it, so a shallow copy is consistent."""
+        with self._lock:
+            self._expire(time.time())
+            handles, self._changed = self._changed.values(), {}
+            out = []
+            for h in handles:
+                raw = isinstance(h.spec.aggregation, RawAgg)
+                out.append((h, h.state, list(h.raw_rows) if raw else dict(h.groups)))
+            return out
 
     def retire(self, handle: DynamicHandle) -> None:
         """Take a finished handle off the serving path once its terminal
@@ -417,7 +457,6 @@ class DynamicMultiplexer:
         ``_RETAIN_FINISHED`` newer handles have retired, and its merged
         state goes with it."""
         with self._lock:
-            handle.retired_at = time.time()
             self.finished[handle.query_id] = handle.state
             self.finished.move_to_end(handle.query_id)
             if len(self.finished) > _TOMBSTONES:
@@ -430,38 +469,33 @@ class DynamicMultiplexer:
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """The FilterStreaming.transformWith analogue: snapshot the registry,
-        run every live spec against this micro-batch, merge partials, then
-        wake the publisher.
-
-        ALL live queries run as ONE routed-aggregation job per micro-batch
-        (see _compile_agg for the plan shape) — one scan per batch
-        regardless of query count or field-set count, with group keys
-        keeping their native types. This is the Spark-expression form of
-        the reference's 'one pass over the records for all queries'
-        (FilterStreaming.scala:54-67)."""
+        run every live spec against this micro-batch in one routed job (the
+        reference's one pass over the records for all queries,
+        FilterStreaming.scala:54-67), merge partials, then wake the
+        publisher."""
         with self._lock:
             live = [
                 (h, h.spec)
                 for h in self.queries.values()
                 if h.state is QueryState.RUNNING
             ]
+            epoch = self._epoch
         if live:
-            self._serve(batch_df, epoch_id, live)
+            self._serve(batch_df, epoch_id, live, epoch)
         # the batch boundary is the unit of serving latency: the publisher
         # emits this batch's merge (and any lifecycle change) now, not on
         # its next timer tick
         self.merged.set()
 
-    def _serve(self, batch_df: DataFrame, epoch_id: int, live: list) -> None:
+    def _serve(self, batch_df: DataFrame, epoch_id: int, live: list, epoch: int) -> None:
         rec = BatchRecord(epoch_id)
         t = time.perf_counter()
-        key = (self._epoch, frozenset(h.query_id for h, _ in live))
-        if self._plan_cache is not None and self._plan_cache[0] == key:
+        if self._plan_cache is not None and self._plan_cache[0] == epoch:
             compiled = self._plan_cache[1]
         else:
             rec.compile_hit = False
             compiled = self._compile_live(live)
-            self._plan_cache = (key, compiled)
+            self._plan_cache = (epoch, compiled)
         agg_compiled, raw_compiled = compiled
         rec.compile_ms = _ms_since(t)
         t = time.perf_counter()
@@ -482,11 +516,11 @@ class DynamicMultiplexer:
         # for join-filter inference that can never apply (~30 ms/batch).
         # Both matter because this body runs at MICRO-BATCH cadence — per-
         # batch driver latency is the control plane's serving floor.
-        confs = {}
-        if self.batch_shuffle_partitions is not None:
-            confs["spark.sql.shuffle.partitions"] = str(self.batch_shuffle_partitions)
-        confs["spark.sql.adaptive.enabled"] = "false"
-        confs["spark.sql.constraintPropagation.enabled"] = "false"
+        confs = {
+            "spark.sql.shuffle.partitions": str(_BATCH_SHUFFLE_PARTITIONS),
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.constraintPropagation.enabled": "false",
+        }
         # the batch frame's own session: foreachBatch binds it to the
         # stream's clone, where confs set on self.spark never arrive
         conf = batch_df.sparkSession.conf
@@ -505,19 +539,8 @@ class DynamicMultiplexer:
         finally:
             for k, v in prev.items():
                 conf.set(k, v)
-        now = time.time()
         with self._lock:
-            for handle, spec in live:
-                # duration expiry checked at batch boundaries (the
-                # reference's clock is the batch too,
-                # JoinStreaming.scala:118-122)
-                if (
-                    handle.state is QueryState.RUNNING
-                    and spec.duration_ms is not None
-                    and (now - handle.started_at) * 1000 >= spec.duration_ms
-                ):
-                    handle.state = QueryState.COMPLETED
-                    self.status_log.append((handle.query_id, Signal.COMPLETE, now))
+            self._expire(time.time())
         self.batches.append(rec)
 
     @staticmethod
@@ -780,15 +803,17 @@ class DynamicMultiplexer:
         with self._lock:
             for r in rows:
                 h = live_now[r[0]]
+                if h.state is not QueryState.RUNNING:
+                    continue  # ended during the take: its result is final
                 if h.raw_columns is None:
                     h.raw_columns = cols
                 h.raw_rows.append(tuple(r[1:]))
+                self._changed[id(h)] = h
             now = time.time()
             for qid, h in live_now.items():
                 if len(h.raw_rows) >= limits[qid] and h.state is QueryState.RUNNING:
                     del h.raw_rows[limits[qid]:]
-                    h.state = QueryState.COMPLETED
-                    self.status_log.append((qid, Signal.COMPLETE, now))
+                    self._end(h, QueryState.COMPLETED, now)
 
     @staticmethod
     def _agg_frame(batch_df: DataFrame, compiled: tuple) -> DataFrame:
@@ -813,14 +838,16 @@ class DynamicMultiplexer:
         rec.job_ms = _ms_since(t)
         rec.partial_rows = len(rows)
         t = time.perf_counter()
-        # merge under the registry lock: the control-plane publisher thread
-        # snapshots handle.groups concurrently, and dict insertion during
-        # its iteration would raise there
+        # merge under the registry lock: the publisher's take_changed
+        # copies handle.groups concurrently, and dict insertion during its
+        # iteration would raise there
         with self._lock:
-            matched: set[str] = set()
+            matched: dict[int, DynamicHandle] = {}
             for r in rows:
                 handle, key_pos, op_meta = plans_by_qid[r[0]]
-                matched.add(handle.query_id)
+                if handle.state is not QueryState.RUNNING:
+                    continue  # ended during the job: its result is final
+                matched[id(handle)] = handle
                 key = tuple(r[p] for p in key_pos)
                 vals = [
                     (r[pos[0]], r[pos[1]]) if op is AggOp.AVG else r[pos]
@@ -842,20 +869,16 @@ class DynamicMultiplexer:
             # the reference checks in BOTH stages (FilterStreaming.scala:
             # 129-133, JoinStreaming.scala:152-159): a batch that updated a
             # query's state counts as one emission
+            self._changed.update(matched)
             now = time.time()
-            for handle, _key_pos, _meta in plans_by_qid.values():
-                if (
-                    handle.rate_limit is None
-                    or handle.query_id not in matched
-                    or handle.state is not QueryState.RUNNING
-                ):
+            for handle in matched.values():
+                if handle.rate_limit is None:
                     continue
                 handle.emit_times.append(now)
                 err = handle.rate_limit.check(handle.emit_times, now)
                 if err is not None:
                     handle.error = err
-                    handle.state = QueryState.FAILED
-                    self.status_log.append((handle.query_id, Signal.FAIL, now))
+                    self._end(handle, QueryState.FAILED, now)
         rec.merge_ms = _ms_since(t)
 
     def start(
@@ -873,10 +896,9 @@ class DynamicMultiplexer:
             self._stream = writer.trigger(availableNow=True).start()
             self._stream.awaitTermination(timeout_s)
             with self._lock:
+                now = time.time()
                 for h in self.queries.values():
-                    if h.state is QueryState.RUNNING:
-                        h.state = QueryState.COMPLETED
-                        self.status_log.append((h.query_id, Signal.COMPLETE, time.time()))
+                    self._end(h, QueryState.COMPLETED, now)
             self.merged.set()
         else:
             self._stream = writer.trigger(processingTime=f"{trigger_ms} milliseconds").start()

@@ -37,11 +37,13 @@ from __future__ import annotations
 import threading
 import time
 import uuid
+from collections import Counter, deque
 from dataclasses import dataclass, field
 from enum import Enum
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQueryListener
 
 from bullet_spark_spark.plans.spec import (
     DistributionAgg,
@@ -53,6 +55,11 @@ from bullet_spark_spark.plans.spec import (
 )
 from bullet_spark_spark.plans.compiler import compile_query
 from bullet_spark_spark.streaming.sinks import MemorySink
+
+
+# lifecycle history a registry keeps: its status log's last entries, and
+# the multiplexer's retired-id tombstones (streaming.dynamic)
+_TOMBSTONES = 10_000
 
 
 class QueryState(str, Enum):
@@ -68,6 +75,14 @@ class Signal(str, Enum):
     COMPLETE = "COMPLETE"
     KILL = "KILL"
     FAIL = "FAIL"
+
+
+# the signal each terminal state is logged with
+_SIGNAL = {
+    QueryState.COMPLETED: Signal.COMPLETE,
+    QueryState.KILLED: Signal.KILL,
+    QueryState.FAILED: Signal.FAIL,
+}
 
 
 @dataclass
@@ -153,55 +168,50 @@ def _output_mode(spec: Query) -> str:
     return "update"
 
 
-class _ProgressListener:
+class _ProgressListener(StreamingQueryListener):
     """StreamingQueryListener bridging Spark's own progress accounting into
     the engine's metrics (parity with the reference's custom metrics source
     on the Spark metrics system, BulletSparkMetricsSource.scala:22-53,
-    accumulators BulletSparkMetrics.scala:14-103)."""
+    accumulators BulletSparkMetrics.scala:14-103): micro-batches and input
+    rows of the stream runs in ``own`` — the ones the runtime started; a
+    run id leaves when its stream terminates. The listener bus delivers
+    events one at a time, so onQueryProgress is the counts' only writer."""
 
     def __init__(self) -> None:
-        from pyspark.sql.streaming import StreamingQueryListener
+        self.own: set[str] = set()
+        self.batches = self.input_rows = 0
 
-        progress: dict[str, dict[str, float]] = {}
+    def onQueryStarted(self, event) -> None:  # noqa: N802
+        pass
 
-        class _L(StreamingQueryListener):
-            def onQueryStarted(self, event) -> None:  # noqa: N802
-                pass
+    def onQueryProgress(self, event) -> None:  # noqa: N802
+        p = event.progress
+        if str(p.runId) in self.own:
+            self.batches += 1
+            self.input_rows += int(p.numInputRows or 0)
 
-            def onQueryProgress(self, event) -> None:  # noqa: N802
-                p = event.progress
-                d = progress.setdefault(
-                    str(p.id), {"batches": 0, "input_rows": 0, "last_rows_per_sec": 0.0}
-                )
-                d["batches"] += 1
-                d["input_rows"] += int(p.numInputRows or 0)
-                d["last_rows_per_sec"] = float(p.processedRowsPerSecond or 0.0)
+    def onQueryIdle(self, event) -> None:  # noqa: N802
+        pass
 
-            def onQueryIdle(self, event) -> None:  # noqa: N802
-                pass
-
-            def onQueryTerminated(self, event) -> None:  # noqa: N802
-                pass
-
-        self.progress = progress
-        self.listener = _L()
+    def onQueryTerminated(self, event) -> None:  # noqa: N802
+        self.own.discard(str(event.runId))
 
 
 class EngineRuntime:
     """Query registry + lifecycle supervisor (the engine's control plane)."""
 
-    def __init__(
-        self, spark: SparkSession, sweep_interval_s: float | None = None,
-        config: "EngineConfig | None" = None,
-    ) -> None:
+    def __init__(self, spark: SparkSession, config: "EngineConfig | None" = None) -> None:
         from bullet_spark_spark.config import EngineConfig
 
         self.spark = spark
         self.config = config or EngineConfig()
+        # running queries, until a finished one's stream has stopped
         self.queries: dict[str, QueryHandle] = {}
-        self.status_log: list[tuple[str, Signal, float]] = []
+        self.status_log: deque[tuple[str, Signal, float]] = deque(maxlen=_TOMBSTONES)
+        # running counters (metrics()): queries received, ended by state,
+        # and the emissions of those that left ``queries``
+        self._counts: Counter = Counter()
         self._lock = threading.Lock()
-        self._sweep_interval_s = sweep_interval_s or self.config.sweep_interval_s
         self._sweeper: threading.Thread | None = None
         self._stop_sweeper = threading.Event()
         self._progress = _ProgressListener()
@@ -211,7 +221,7 @@ class EngineRuntime:
         """Register the progress listener on first stream launch (lazy: a
         batch-only runtime never pays the Python callback channel)."""
         if not self._listener_on:
-            self.spark.streams.addListener(self._progress.listener)
+            self.spark.streams.addListener(self._progress)
             self._listener_on = True
 
     # -- registration -------------------------------------------------------
@@ -325,9 +335,11 @@ class EngineRuntime:
         writer = writer.trigger(processingTime=f"{trigger_ms} milliseconds")
         self._ensure_listener()
         handle.stream = writer.start()
+        self._progress.own.add(str(handle.stream.runId))
 
         with self._lock:
             self.queries[qid] = handle
+            self._counts["received"] += 1
         self._ensure_sweeper()
         return handle
 
@@ -340,7 +352,8 @@ class EngineRuntime:
         timeout_s: float = 120,
     ) -> QueryHandle:
         """Drain-everything-then-stop variant (Trigger.AvailableNow): used for
-        deterministic tests and bounded backfills."""
+        deterministic tests and bounded backfills. The query never enters
+        ``queries``; metrics() counts it."""
         qid = query_id or uuid.uuid4().hex[:12]
         sink = MemorySink()
         handle = QueryHandle(query_id=qid, spec=spec, sink=sink)
@@ -350,66 +363,57 @@ class EngineRuntime:
             writer = writer.option("checkpointLocation", checkpoint_dir)
         self._ensure_listener()
         handle.stream = writer.trigger(availableNow=True).start()
-        handle.stream.awaitTermination(timeout_s)
-        handle.state = QueryState.COMPLETED
-        self._log(qid, Signal.COMPLETE)
+        self._progress.own.add(str(handle.stream.runId))
         with self._lock:
-            self.queries[qid] = handle
+            self._counts["received"] += 1
+        handle.stream.awaitTermination(timeout_s)
+        self._finish(handle, QueryState.COMPLETED)
         return handle
 
     # -- lifecycle ----------------------------------------------------------
 
     def kill(self, query_id: str) -> None:
-        """External KILL signal (ref JoinStreaming.scala:144-158)."""
-        handle = self.queries[query_id]
-        if handle.is_active():
-            self._finish(handle, QueryState.KILLED, Signal.KILL)
+        """External KILL signal (ref JoinStreaming.scala:144-158). An id
+        that is not running — finished, or never registered — ignores it."""
+        handle = self.queries.get(query_id)
+        if handle is not None:
+            self._finish(handle, QueryState.KILLED)
 
     def stop_all(self) -> None:
         for h in list(self.queries.values()):
-            if h.is_active():
-                self._finish(h, QueryState.KILLED, Signal.KILL)
+            self._finish(h, QueryState.KILLED)
         self._stop_sweeper.set()
         if self._listener_on:
             self._listener_on = False
             time.sleep(0.2)  # let queued terminate events flush off the bus
             try:
-                self.spark.streams.removeListener(self._progress.listener)
+                self.spark.streams.removeListener(self._progress)
             except Exception:
                 pass  # session may be tearing down
 
     def active(self) -> list[QueryHandle]:
-        return [h for h in self.queries.values() if h.is_active()]
+        return [h for h in list(self.queries.values()) if h.is_active()]
 
     def metrics(self) -> dict[str, int | float]:
         """Engine counters (ref BulletSparkMetrics accumulators,
         BulletSparkMetrics.scala:14-103): received/running/done/killed/failed
         plus total emissions, and Spark's OWN progress accounting bridged in
         via StreamingQueryListener (ref BulletSparkMetricsSource.scala:22-53):
-        micro-batches executed and input rows processed across this runtime's
-        streams — not engine-side estimates."""
-        states = [h.state for h in self.queries.values()]
-        stream_ids: set[str] = set()
-        for h in self.queries.values():
-            try:
-                if h.stream is not None:
-                    stream_ids.add(str(h.stream.id))
-            except Exception:
-                pass
-        prog = [
-            self._progress.progress[sid]
-            for sid in stream_ids
-            if sid in self._progress.progress
-        ]
+        micro-batches executed and input rows processed across every stream
+        this runtime started — not engine-side estimates."""
+        with self._lock:
+            c = self._counts.copy()
+            live = list(self.queries.values())
+            c["emissions"] += sum(h.sink.num_emissions for h in live)
         return {
-            "queries_received": len(states),
-            "queries_running": sum(s is QueryState.RUNNING for s in states),
-            "queries_done": sum(s is QueryState.COMPLETED for s in states),
-            "queries_killed": sum(s is QueryState.KILLED for s in states),
-            "queries_failed": sum(s is QueryState.FAILED for s in states),
-            "emissions": sum(h.sink.num_emissions for h in self.queries.values()),
-            "spark_batches": int(sum(p["batches"] for p in prog)),
-            "spark_input_rows": int(sum(p["input_rows"] for p in prog)),
+            "queries_received": c["received"],
+            "queries_running": sum(h.is_active() for h in live),
+            "queries_done": c[QueryState.COMPLETED],
+            "queries_killed": c[QueryState.KILLED],
+            "queries_failed": c[QueryState.FAILED],
+            "emissions": c["emissions"],
+            "spark_batches": self._progress.batches,
+            "spark_input_rows": self._progress.input_rows,
         }
 
     def register_metrics_source(self, prefix: str = "bullet") -> dict[str, object]:
@@ -428,16 +432,7 @@ class EngineRuntime:
         sc = self.spark.sparkContext._jsc.sc()
         if not hasattr(self, "_jvm_metrics"):
             self._jvm_metrics: dict[str, object] = {}
-        for name in (
-            "queries_received",
-            "queries_running",
-            "queries_done",
-            "queries_killed",
-            "queries_failed",
-            "emissions",
-            "spark_batches",
-            "spark_input_rows",
-        ):
+        for name in self.metrics():
             if name not in self._jvm_metrics:
                 self._jvm_metrics[name] = sc.longAccumulator(f"{prefix}.{name}")
         return self.sync_metrics()
@@ -470,7 +465,7 @@ class EngineRuntime:
                 if not h.is_active():
                     continue
                 if h.error is not None:
-                    self._finish(h, QueryState.FAILED, Signal.FAIL)
+                    self._finish(h, QueryState.FAILED)
                     continue
                 # stream died underneath us (source error / natural drain):
                 # reconcile handle state instead of leaving it RUNNING —
@@ -488,37 +483,45 @@ class EngineRuntime:
                         pass
                     if exc is not None:
                         h.error = str(exc)[:500]
-                        self._finish(h, QueryState.FAILED, Signal.FAIL)
+                        self._finish(h, QueryState.FAILED)
                     else:
-                        self._finish(h, QueryState.COMPLETED, Signal.COMPLETE)
+                        self._finish(h, QueryState.COMPLETED)
                     continue
                 spec = h.spec
                 if (
                     isinstance(spec.aggregation, RawAgg)
                     and h.raw_rows_seen >= spec.aggregation.limit
                 ):
-                    self._finish(h, QueryState.COMPLETED, Signal.COMPLETE)
+                    self._finish(h, QueryState.COMPLETED)
                     continue
                 if (
                     spec.duration_ms is not None
                     and (time.time() - h.started_at) * 1000 >= spec.duration_ms
                 ):
-                    self._finish(h, QueryState.COMPLETED, Signal.COMPLETE)
-            if not any(h.is_active() for h in self.queries.values()):
+                    self._finish(h, QueryState.COMPLETED)
+            if not self.active():
                 break
-            self._stop_sweeper.wait(self._sweep_interval_s)
+            self._stop_sweeper.wait(self.config.sweep_interval_s)
 
-    def _finish(self, handle: QueryHandle, state: QueryState, signal: Signal) -> None:
-        # log before state flips/stop: observers that see the query inactive
-        # must also see its terminal signal (stop() can block for a batch)
-        self._log(handle.query_id, signal)
-        handle.state = state
+    def _finish(self, handle: QueryHandle, state: QueryState) -> None:
+        """End a running query: log, count and stop it, then drop it from
+        ``queries``. A finished handle ignores it."""
+        with self._lock:
+            if not handle.is_active():
+                return
+            # log before the state flips: observers that see the query
+            # inactive must also see its terminal signal (stop() can block
+            # for a batch)
+            self.status_log.append((handle.query_id, _SIGNAL[state], time.time()))
+            handle.state = state
+            self._counts[state] += 1
         try:
             if handle.stream is not None and handle.stream.isActive:
                 handle.stream.stop()
         except Exception:  # stream may already be terminating
             pass
-
-    def _log(self, query_id: str, signal: Signal) -> None:
+        # stopped, so its emissions are final
         with self._lock:
-            self.status_log.append((query_id, signal, time.time()))
+            self._counts["emissions"] += handle.sink.num_emissions
+            if self.queries.get(handle.query_id) is handle:
+                del self.queries[handle.query_id]

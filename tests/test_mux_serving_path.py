@@ -5,6 +5,7 @@ queries leaving the serving path."""
 
 from __future__ import annotations
 
+import dataclasses
 import math
 import random
 import threading
@@ -332,8 +333,8 @@ def test_finished_queries_leave_the_serving_path(spark, monkeypatch):
     """5,000 queries churn through process_batch and the publisher: each
     gets one RESULT and one SIGNAL, then leaves the serving path. The
     registry holds the live queries plus a bounded window of recently
-    finished ones, a pass rebuilds only live results, and a late KILL for a
-    long-gone id stays a no-op."""
+    finished ones, a pass with no batch before it rebuilds no result, and a
+    late KILL for a long-gone id stays a no-op."""
     (batch,) = _batches(spark, n=1, rows=20)
     mux = DynamicMultiplexer(spark)
     bus = _ListTransport()
@@ -344,22 +345,25 @@ def test_finished_queries_leave_the_serving_path(spark, monkeypatch):
     calls = []
     result = DynamicHandle.result
     monkeypatch.setattr(
-        DynamicHandle, "result", lambda self: (calls.append(self.query_id), result(self))[1]
+        DynamicHandle,
+        "result",
+        lambda self, *a: (calls.append(self.query_id), result(self, *a))[1],
     )
     rounds, per_round = 50, 100
     for r in range(rounds):
         ids = [f"c{r}-{j}" for j in range(per_round)]
         for j, qid in enumerate(ids):
-            mux.register(qid, _count(E.f("u") >= j % 50))
+            spec = _count(E.f("u") >= j % 50)
+            if j >= per_round // 2:  # expires at the batch boundary
+                spec = dataclasses.replace(spec, duration_ms=0)
+            mux.register(qid, spec)
         mux.process_batch(batch, r)
         for qid in ids[: per_round // 2]:
             mux.kill(qid)
-        for qid in ids[per_round // 2:]:
-            mux.queries[qid].state = QueryState.COMPLETED
         plane._publish_once()
     calls.clear()
     plane._publish_once()
-    assert sorted(calls) == sorted(standing)  # live handles only
+    assert calls == []  # no batch and no query end since the last pass
     assert len(mux.queries) == len(standing) + dynamic._RETAIN_FINISHED
     assert sum(h.state is QueryState.RUNNING for h in mux.queries.values()) == len(standing)
     assert len(plane._published) == len(standing)
@@ -415,3 +419,72 @@ def test_publisher_and_batches_share_handles_safely(spark):
     assert not [e for e in bus.of("ERROR")]
     results = [e["query_id"] for e in bus.of("RESULT")]
     assert sorted(results) == sorted(f"t{k}-{j}" for k in range(6) for j in range(150))
+
+
+def test_publish_shapes_outside_the_lock(spark, monkeypatch):
+    """The publisher copies each changed handle's state under the
+    multiplexer lock and shapes it outside: neither result() nor the
+    approx COUNT DISTINCT union job runs while the lock is held."""
+    (batch,) = _batches(spark, n=1)
+    mux = DynamicMultiplexer(spark)
+    for qid in ("cd_u", "top_b", "qnt"):
+        mux.register(qid, MIXED[qid])
+    bus = _ListTransport()
+    plane = ControlPlane(spark, mux, bus, poll_interval_s=60)
+    mux.process_batch(batch, 0)
+    seen = []
+    for name in ("result", "_hll_union"):
+        fn = getattr(DynamicHandle, name)
+
+        def spy(self, *a, fn=fn, name=name):
+            seen.append((name, mux._lock.locked()))
+            return fn(self, *a)
+
+        monkeypatch.setattr(DynamicHandle, name, spy)
+    plane._publish_once()
+    assert ("_hll_union", False) in seen  # the union ran
+    assert sorted(n for n, _ in seen).count("result") == 3
+    assert not [n for n, locked in seen if locked]
+    assert len(bus.of("WINDOW")) == 3
+
+
+def test_a_pass_reshapes_only_what_changed(spark, monkeypatch):
+    """A batch that merges into 2 of 6 live handles makes the next pass
+    shape exactly those 2; a pass with no batch before it shapes none, and
+    one after a KILL shapes only the killed query."""
+    (batch,) = _batches(spark, n=1, rows=50)
+    mux = DynamicMultiplexer(spark)
+    for i in range(6):  # u is never negative: q2..q5 match no row
+        mux.register(f"q{i}", _count(E.f("u") >= 0 if i < 2 else E.f("u") < 0))
+    bus = _ListTransport()
+    plane = ControlPlane(spark, mux, bus, poll_interval_s=60)
+    calls = []
+    result = DynamicHandle.result
+    monkeypatch.setattr(
+        DynamicHandle,
+        "result",
+        lambda self, *a: (calls.append(self.query_id), result(self, *a))[1],
+    )
+    mux.process_batch(batch, 0)
+    plane._publish_once()
+    assert sorted(calls) == ["q0", "q1"]
+    calls.clear()
+    plane._publish_once()
+    assert calls == []
+    mux.kill("q4")
+    plane._publish_once()
+    assert calls == ["q4"]
+    assert [e["query_id"] for e in bus.of("SIGNAL")] == ["q4"]
+    assert sorted(e["query_id"] for e in bus.of("WINDOW")) == ["q0", "q1"]
+
+
+def test_status_log_keeps_the_last_entries(spark, monkeypatch):
+    """The multiplexer's status log is bounded: churning more queries than
+    the bound leaves the bound's worth of the most recent entries."""
+    monkeypatch.setattr(dynamic, "_TOMBSTONES", 50)
+    mux = DynamicMultiplexer(spark)
+    for i in range(200):
+        mux.register(f"c{i}", _count())
+        mux.kill(f"c{i}")
+    assert len(mux.status_log) == 50
+    assert [q for q, _s, _t in mux.status_log] == [f"c{i}" for i in range(150, 200)]

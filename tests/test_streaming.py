@@ -504,6 +504,31 @@ def test_metrics_source_visible_outside_python(spark, tables, tmp_path, runtime)
     assert accs["spark_input_rows"].value() > 0
 
 
+def test_finished_queries_leave_the_runtime(spark, tables, tmp_path, monkeypatch):
+    """run_available never enters the registry and metrics() still counts
+    each query and its stream; the status log keeps its last entries only."""
+    from bullet_spark_spark.streaming import runtime as runtime_mod
+
+    monkeypatch.setattr(runtime_mod, "_TOMBSTONES", 2)
+    rt = EngineRuntime(spark)
+    spec = Query(
+        source="events",
+        aggregation=GroupAgg(fields=["event_type"], operations=[(AggOp.COUNT, None, "cnt")]),
+    )
+    n = 3
+    try:
+        for i in range(n):
+            stream = file_drip(spark, tables["events"], str(tmp_path / f"s{i}"), chunks=1)
+            rt.run_available(spec, stream, checkpoint_dir=str(tmp_path / f"ck{i}"))
+        assert rt.queries == {}
+        m = rt.metrics()
+        assert m["queries_received"] == n and m["queries_done"] == n
+        assert m["queries_running"] == 0 and m["emissions"] == n
+        assert [s for _q, s, _t in rt.status_log] == [Signal.COMPLETE] * 2
+    finally:
+        rt.stop_all()
+
+
 def test_streaming_curation_funnel(spark, tables, tmp_path):
     """The curation funnel running over a micro-batch stream: per-batch
     verdict histograms accumulate to EXACTLY the batch funnel's report

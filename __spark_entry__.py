@@ -52,7 +52,7 @@ from bullet_spark_spark.operators import sampling as smp
 from bullet_spark_spark.operators import similarity as sim
 from bullet_spark_spark.operators import temporal as tmp
 from bullet_spark_spark.operators import text as tx
-from bullet_spark_spark.sources.streaming import drain_shuffle_partitions
+from bullet_spark_spark.sources.streaming import drain
 from bullet_spark_spark.plans import (
     AggOp,
     Computation,
@@ -611,15 +611,7 @@ def window_record_perkey(spark, sf_dir):
         )
         windows = record_window_count(stream, every_n=20, key_cols=["user_id"])
         sink = MemorySink()
-        with drain_shuffle_partitions(spark, ev):
-            sq = (
-                windows.writeStream.outputMode("append")
-                .foreachBatch(sink)
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination(120)
+        drain(windows, ev, foreach_batch=sink)
         rows = [tuple(r) for r in sink.rows]
     return spark.createDataFrame(rows, "user_id bigint, window_idx bigint, cnt bigint")
 
@@ -6473,19 +6465,8 @@ def streaming_static_enrich_parity(spark, sf_dir):
             .cast("double")
             .alias("revenue"),
         )
-        with drain_shuffle_partitions(spark, t["orders"]):
-            q_ = (
-                agg.writeStream.format("memory")
-                .queryName("__enrich_parity")
-                .outputMode("complete")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(180)
-    return spark.sql(
-        "SELECT c_mktsegment, n_orders, revenue FROM __enrich_parity"
-    )
+        drained = drain(agg, t["orders"], "complete")
+    return drained.select("c_mktsegment", "n_orders", "revenue")
 
 
 @q(
@@ -7368,19 +7349,9 @@ def streaming_ewma_anomalies(spark, sf_dir):
     with tempfile.TemporaryDirectory() as work:
         stream = file_drip(spark, sub, work, chunks=2)
         out = _ew(stream, ["user_id"], "ts", "v", alpha=0.2, z_threshold=3.0, warmup=5)
-        with drain_shuffle_partitions(spark, sub):
-            q_ = (
-                out.writeStream.format("memory")
-                .queryName("__ewma_anomalies")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(180)
-    return spark.sql(
-        "SELECT user_id, ts, value, round(ewma, 6) AS ewma, is_anomaly "
-        "FROM __ewma_anomalies"
+        drained = drain(out, sub)
+    return drained.selectExpr(
+        "user_id", "ts", "value", "round(ewma, 6) AS ewma", "is_anomaly"
     )
 
 
@@ -7426,19 +7397,10 @@ def streaming_cusum_monitor(spark, sf_dir):
             h_threshold=4.0,
             baselines=base,
         )
-        with drain_shuffle_partitions(spark, daily):
-            q_ = (
-                out.writeStream.format("memory")
-                .queryName("__cusum_monitor")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(180)
-    return spark.sql(
-        "SELECT event_type, ts, value, round(s_pos, 6) AS s_pos, "
-        "round(s_neg, 6) AS s_neg, alarm FROM __cusum_monitor"
+        drained = drain(out, daily)
+    return drained.selectExpr(
+        "event_type", "ts", "value", "round(s_pos, 6) AS s_pos",
+        "round(s_neg, 6) AS s_neg", "alarm",
     )
 
 
@@ -9584,6 +9546,7 @@ def streaming_heavy_hitters(spark, sf_dir):
     from bullet_spark_spark.sources.streaming import file_drip
     from bullet_spark_spark.streaming.monitor import (
         heavy_hitters_monitor as _hh,
+        latest_snapshot,
     )
 
     t = _t(spark, sf_dir)
@@ -9598,22 +9561,10 @@ def streaming_heavy_hitters(spark, sf_dir):
     with tempfile.TemporaryDirectory() as work:
         stream = file_drip(spark, toks, work, chunks=3)
         out = _hh(stream, "tok", m=32, n_shards=4)
-        with drain_shuffle_partitions(spark, toks):
-            q_ = (
-                out.writeStream.format("memory")
-                .queryName("__hh_monitor")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(300)
-    snap = spark.table("__hh_monitor")
-    final = snap.withColumn(
-        "__mx", F.max("n_seen").over(W.partitionBy("shard"))
-    ).filter(F.col("n_seen") == F.col("__mx"))
+        drained = drain(out, toks)
     return (
-        final.select("key", "est", "err")
+        latest_snapshot(drained, "shard")
+        .select("key", "est", "err")
         .orderBy(F.desc("est"), "key")
         .limit(30)
     )
@@ -9716,6 +9667,7 @@ def streaming_distinct_monitor(spark, sf_dir):
     from bullet_spark_spark.sources.streaming import file_drip
     from bullet_spark_spark.streaming.monitor import (
         distinct_monitor as _dm,
+        latest_snapshot,
     )
 
     t = _t(spark, sf_dir)
@@ -9731,21 +9683,8 @@ def streaming_distinct_monitor(spark, sf_dir):
     with tempfile.TemporaryDirectory() as work:
         stream = file_drip(spark, toks, work, chunks=3)
         out = _dm(stream, "lang", "tok", k=256)
-        with drain_shuffle_partitions(spark, toks):
-            q_ = (
-                out.writeStream.format("memory")
-                .queryName("__kmv_monitor")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(300)
-    snap = spark.table("__kmv_monitor")
-    final = snap.withColumn(
-        "__mx", F.max("n_seen").over(W.partitionBy("key"))
-    ).filter(F.col("n_seen") == F.col("__mx"))
-    return final.select(
+        drained = drain(out, toks)
+    return latest_snapshot(drained, "key").select(
         F.col("key").alias("lang"),
         F.col("n_seen").cast("bigint").alias("n_tokens"),
         F.round("est_distinct", 6).alias("est_distinct"),
@@ -10018,17 +9957,8 @@ def streaming_sample_drain(spark, sf_dir):
     with tempfile.TemporaryDirectory() as work:
         stream = file_drip(spark, src, work, chunks=3)
         out = _sm(stream, "k", k=32, n_shards=8)
-        with drain_shuffle_partitions(spark, src):
-            q_ = (
-                out.writeStream.format("memory")
-                .queryName("__sample_drain")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(300)
-    return merged_sample(spark.table("__sample_drain"), k=32).select(
+        drained = drain(out, src)
+    return merged_sample(drained, k=32).select(
         "key", "priority", F.col("n_seen").cast("bigint").alias("n_seen")
     )
 
@@ -10196,20 +10126,10 @@ def streaming_join_drain(spark, sf_dir):
             ls, rs, ["user_id"], "pts", "cts",
             max_delay="4320 hours", lookback_sec=1800,
         )
-        with drain_shuffle_partitions(spark, ev):
-            q_ = (
-                out.writeStream.format("memory")
-                .queryName("__ssj_drain")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(300)
-    return spark.sql(
-        "SELECT uid_out AS user_id, click_id, purchase_id, "
-        "round(unix_micros(pts) / 1e6 - unix_micros(cts) / 1e6, 6) AS lag_sec "
-        "FROM __ssj_drain"
+        drained = drain(out, ev)
+    return drained.selectExpr(
+        "uid_out AS user_id", "click_id", "purchase_id",
+        "round(unix_micros(pts) / 1e6 - unix_micros(cts) / 1e6, 6) AS lag_sec",
     )
 
 
@@ -10241,19 +10161,8 @@ def streaming_dedup_drain(spark, sf_dir):
             stream, ["user_id"], event_time_col="ets",
             watermark_delay="4320 hours",
         )
-        with drain_shuffle_partitions(spark, ev):
-            q_ = (
-                out.writeStream.format("memory")
-                .queryName("__dedup_drain")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(300)
-    return spark.sql(
-        "SELECT user_id FROM __dedup_drain ORDER BY user_id"
-    )
+        drained = drain(out, ev)
+    return drained.select("user_id").orderBy("user_id")
 
 
 @q(
@@ -10346,6 +10255,7 @@ def streaming_sample_by_lang(spark, sf_dir):
     import tempfile
 
     from bullet_spark_spark.sources.streaming import file_drip
+    from bullet_spark_spark.streaming.monitor import latest_snapshot
     from bullet_spark_spark.streaming.monitor import sample_monitor as _sm
 
     t = _t(spark, sf_dir)
@@ -10355,21 +10265,8 @@ def streaming_sample_by_lang(spark, sf_dir):
     with tempfile.TemporaryDirectory() as work:
         stream = file_drip(spark, src, work, chunks=3)
         out = _sm(stream, "k", k=8, group_col="lang")
-        with drain_shuffle_partitions(spark, src):
-            q_ = (
-                out.writeStream.format("memory")
-                .queryName("__sample_by_lang")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(300)
-    snap = spark.table("__sample_by_lang")
-    final = snap.withColumn(
-        "__mx", F.max("n_seen").over(W.partitionBy("group"))
-    ).filter(F.col("n_seen") == F.col("__mx"))
-    return final.select(
+        drained = drain(out, src)
+    return latest_snapshot(drained, "group").select(
         F.col("group").alias("lang"),
         "key",
         "priority",
@@ -10914,6 +10811,7 @@ def streaming_topk_exact_drain(spark, sf_dir):
     from bullet_spark_spark.sources.streaming import file_drip
     from bullet_spark_spark.streaming.monitor import (
         heavy_hitters_monitor as _hh,
+        latest_snapshot,
     )
 
     t = _t(spark, sf_dir)
@@ -10923,22 +10821,10 @@ def streaming_topk_exact_drain(spark, sf_dir):
     with tempfile.TemporaryDirectory() as work:
         stream = file_drip(spark, src, work, chunks=3)
         out = _hh(stream, "k", m=512, n_shards=4)
-        with drain_shuffle_partitions(spark, src):
-            q_ = (
-                out.writeStream.format("memory")
-                .queryName("__topk_exact")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(300)
-    snap = spark.table("__topk_exact")
-    final = snap.withColumn(
-        "__mx", F.max("n_seen").over(W.partitionBy("shard"))
-    ).filter(F.col("n_seen") == F.col("__mx"))
+        drained = drain(out, src)
     return (
-        final.groupBy("key")
+        latest_snapshot(drained, "shard")
+        .groupBy("key")
         .agg(F.sum("est").cast("bigint").alias("cnt"))
         .orderBy(F.desc("cnt"), "key")
         .limit(20)
@@ -11135,20 +11021,8 @@ def streaming_session_drain(spark, sf_dir):
             )
             .agg(F.count(F.lit(1)).alias("cnt"), F.min("ts").alias("session_start"))
         )
-        with drain_shuffle_partitions(spark, ev):
-            q_ = (
-                agg.writeStream.format("memory")
-                .queryName("__sess_drain")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(300)
-    return spark.sql(
-        "SELECT user_id, session_start, cnt FROM __sess_drain "
-        "WHERE user_id >= 0"
-    )
+        drained = drain(agg, ev)
+    return drained.filter("user_id >= 0").select("user_id", "session_start", "cnt")
 
 
 @q(
@@ -12298,17 +12172,8 @@ def streaming_quantile_drain(spark, sf_dir):
         # pinned by the parity tests at max_files_per_trigger=1.
         stream = file_drip(spark, src, work, chunks=3, max_files_per_trigger=3)
         out = _sm(stream, "k", k=256, n_shards=8, payload_col="value")
-        with drain_shuffle_partitions(spark, src):
-            q_ = (
-                out.writeStream.format("memory")
-                .queryName("__quantile_drain")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(300)
-    merged = merged_sample(spark.table("__quantile_drain"), k=256).select(
+        drained = drain(out, src)
+    merged = merged_sample(drained, k=256).select(
         F.col("payload").cast("double").alias("v"), "n_seen"
     )
     agg = merged.agg(
@@ -12373,6 +12238,7 @@ def streaming_quantile_by_type(spark, sf_dir):
     import tempfile
 
     from bullet_spark_spark.sources.streaming import file_drip
+    from bullet_spark_spark.streaming.monitor import latest_snapshot
     from bullet_spark_spark.streaming.monitor import sample_monitor as _sm
 
     t = _t(spark, sf_dir)
@@ -12384,22 +12250,8 @@ def streaming_quantile_by_type(spark, sf_dir):
     with tempfile.TemporaryDirectory() as work:
         stream = file_drip(spark, src, work, chunks=3)
         out = _sm(stream, "k", k=64, group_col="event_type", payload_col="value")
-        with drain_shuffle_partitions(spark, src):
-            q_ = (
-                out.writeStream.format("memory")
-                .queryName("__quantile_by_type")
-                .outputMode("append")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(300)
-    snap = spark.table("__quantile_by_type")
-    latest = snap.withColumn(
-        "__mx", F.max("n_seen").over(W.partitionBy("group"))
-    ).filter(
-        (F.col("n_seen") == F.col("__mx")) & F.col("key").isNotNull()
-    )
+        drained = drain(out, src)
+    latest = latest_snapshot(drained, "group").filter(F.col("key").isNotNull())
     samp = latest.withColumn(
         "__rk",
         F.row_number().over(
@@ -12592,17 +12444,7 @@ def streaming_drift_psi_drain(spark, sf_dir):
         counts = stream.groupBy(bucket.alias("bucket")).agg(
             F.count(F.lit(1)).alias("n_live")
         )
-        with drain_shuffle_partitions(spark, live_src):
-            q_ = (
-                counts.writeStream.format("memory")
-                .queryName("__psi_drain")
-                .outputMode("complete")
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q_.awaitTermination(300)
-    live = spark.table("__psi_drain")
+        live = drain(counts, live_src, "complete")
     buckets = spark.range(10).select(F.col("id").alias("bucket"))
     j = (
         buckets.join(F.broadcast(ref), "bucket", "left")

@@ -144,7 +144,7 @@ REPEATS = 3
 # floor-dominated (~1.7 s of micro-batch machinery per cycle) so a single
 # contended cycle moves the median of 3 by ~15% — exactly the r8→r9 driver
 # artifact swing (21.12→17.98 q/s) that local isolated runs on the SAME two
-# code revisions measured as 19.21 vs 19.16 q/s (BENCH_LOCAL_r08/r09). The
+# code revisions measured as 19.21 vs 19.16 q/s in isolated local runs. The
 # full artifact records every sample plus the floor comparison so a swing
 # outside the documented band is visible as data, not narrative.
 CONTROL_REPEATS = 5

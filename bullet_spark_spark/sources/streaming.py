@@ -5,18 +5,33 @@ is ``from_json``/``from_avro``; converters are column projections.
 
 ``file_drip`` re-plays a batch DataFrame as a file stream in K chunks — the
 deterministic test source standing in for the reference's queueStream/
-MockDataProducer pattern (MockDataProducer.scala:15-47)."""
+MockDataProducer pattern (MockDataProducer.scala:15-47).
+
+``drain`` is the engine's one bounded stream run (Trigger.AvailableNow, the
+run-once/backfill form of a Bullet query's bounded result): every drain in
+the package and the entry registry starts and waits through it. It never
+returns a partial result (a run that outlives its timeout is stopped and
+raises ``TimeoutError``), never leaves a stream running, and reads its
+result from a memory sink named for that one call, whose view it drops
+before returning. ``drain_shuffle_partitions`` sizes the run's state
+partitions; the run holds that session conf only around ``start()``, under
+one module lock. A stream fixes its state partition count when it starts,
+so holding the conf for the whole run buys nothing, and two overlapping
+runs that each restore it on exit could leave the other's value set."""
 
 from __future__ import annotations
 
 import os
+import tempfile
+import threading
+import uuid
+from collections.abc import Callable
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
-
-
-from contextlib import contextmanager
 
 
 @contextmanager
@@ -28,8 +43,8 @@ def drain_shuffle_partitions(
 ):
     """Scale a drain's shuffle/STATE partition count to the replayed
     frame's size instead of the session's data-plane default, for the
-    duration of one streaming drain (set before ``start()``, restored
-    after termination).
+    start of one streaming drain (:func:`drain` holds it around
+    ``start()``).
 
     Why: a Structured Streaming stateful operator fixes its state
     partition count from ``spark.sql.shuffle.partitions`` at query start
@@ -71,6 +86,69 @@ def drain_shuffle_partitions(
         yield n
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+# one default for every bounded run; a drain that outlives it is stopped
+DRAIN_TIMEOUT_S = 300
+# held around a drain's start(): the shuffle-partition conf it sizes is
+# session-global, and a stream reads it only when it starts
+_starting = threading.Lock()
+
+
+def drain(
+    frame: DataFrame,
+    replayed: DataFrame | None = None,
+    output_mode: str = "append",
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    checkpoint_dir: str | None = None,
+    timeout_s: float = DRAIN_TIMEOUT_S,
+    on_start: Callable[[StreamingQuery], None] | None = None,
+) -> DataFrame | None:
+    """Run the streaming ``frame`` once over everything its source holds
+    (Trigger.AvailableNow) and wait for it to finish.
+
+    Without ``foreach_batch`` the rows go to a memory sink and the result
+    is a DataFrame of what it holds: every row in ``append`` mode, the
+    last result in ``complete`` mode. The frame keeps its rows after the
+    sink's view, named for this call, is dropped, so two threads can
+    drain the same query at once. With ``foreach_batch`` that function
+    receives each micro-batch and the result is None.
+
+    ``replayed`` is the batch frame the stream replays, when there is one:
+    its size sets the state partition count (:func:`drain_shuffle_partitions`);
+    without it the session's count stands. ``on_start`` sees the query
+    once it has started. The checkpoint goes to a temporary directory
+    unless ``checkpoint_dir`` is given. A failed stream raises its error;
+    one still running after ``timeout_s`` is stopped and raises
+    ``TimeoutError``. Either way no stream is left running."""
+    spark = frame.sparkSession
+    writer = frame.writeStream.outputMode(output_mode).trigger(availableNow=True)
+    name = None
+    if foreach_batch is None:
+        name = f"__drain_{uuid.uuid4().hex}"
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    with tempfile.TemporaryDirectory(prefix="drain-ck-") as tmp:
+        writer = writer.option("checkpointLocation", checkpoint_dir or tmp)
+        sizing = (
+            nullcontext()
+            if replayed is None
+            else drain_shuffle_partitions(spark, replayed)
+        )
+        with _starting, sizing:
+            sq = writer.start()
+        try:
+            if on_start is not None:
+                on_start(sq)
+            if not sq.awaitTermination(timeout_s):
+                raise TimeoutError(f"drain still running after {timeout_s} s")
+            return None if name is None else spark.table(name)
+        finally:
+            if sq.isActive:
+                sq.stop()
+            if name is not None:
+                spark.catalog.dropTempView(name)
 
 
 def ensure_event_time(df: DataFrame, col: str) -> DataFrame:

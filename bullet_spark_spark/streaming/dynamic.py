@@ -63,6 +63,7 @@ from bullet_spark_spark.plans.spec import (
     RawAgg,
     TopKAgg,
 )
+from bullet_spark_spark.sources.streaming import drain
 from bullet_spark_spark.streaming.runtime import (
     _SIGNAL,
     _TOMBSTONES,
@@ -889,19 +890,46 @@ class DynamicMultiplexer:
         available_now: bool = False,
         timeout_s: float = 120,
     ):
+        """Serve every registered query from ``stream_df``, one
+        ``process_batch`` per micro-batch, and return the stream.
+
+        A processing-time stream keeps running until ``stop()``. With
+        ``available_now`` the stream drains what its source holds
+        (``sources.streaming.drain``) and every live query then ends
+        COMPLETED. A drain still running after ``timeout_s`` is stopped:
+        every live query ends FAILED with the timeout as its error, and
+        the ``TimeoutError`` propagates; a failed stream does the same
+        with its own error."""
+        if available_now:
+            state, error = QueryState.COMPLETED, None
+
+            def started(stream) -> None:
+                self._stream = stream
+
+            try:
+                drain(
+                    stream_df,
+                    foreach_batch=self.process_batch,
+                    checkpoint_dir=checkpoint_dir,
+                    timeout_s=timeout_s,
+                    on_start=started,
+                )
+            except Exception as e:
+                state, error = QueryState.FAILED, str(e)[:500]
+                raise
+            finally:
+                with self._lock:
+                    now = time.time()
+                    for h in self.queries.values():
+                        if h.state is QueryState.RUNNING:
+                            h.error = error
+                            self._end(h, state, now)
+                self.merged.set()
+            return self._stream
         writer = stream_df.writeStream.foreachBatch(self.process_batch)
         if checkpoint_dir:
             writer = writer.option("checkpointLocation", checkpoint_dir)
-        if available_now:
-            self._stream = writer.trigger(availableNow=True).start()
-            self._stream.awaitTermination(timeout_s)
-            with self._lock:
-                now = time.time()
-                for h in self.queries.values():
-                    self._end(h, QueryState.COMPLETED, now)
-            self.merged.set()
-        else:
-            self._stream = writer.trigger(processingTime=f"{trigger_ms} milliseconds").start()
+        self._stream = writer.trigger(processingTime=f"{trigger_ms} milliseconds").start()
         return self._stream
 
     def stop(self) -> None:

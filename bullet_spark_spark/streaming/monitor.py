@@ -579,6 +579,19 @@ def sample_monitor(
     )
 
 
+def latest_snapshot(snapshot: DataFrame, by: str) -> DataFrame:
+    """The newest snapshot of each ``by`` group (a shard, a key) from a
+    drained monitor sink: the rows carrying the group's largest
+    ``n_seen``, which is monotone per group, so the last emission wins."""
+    from pyspark.sql.window import Window as W
+
+    return (
+        snapshot.withColumn("__mx", F.max("n_seen").over(W.partitionBy(by)))
+        .filter(F.col("n_seen") == F.col("__mx"))
+        .drop("__mx")
+    )
+
+
 def merged_sample(snapshot: DataFrame, k: int) -> DataFrame:
     """k-truncating merge of :func:`sample_monitor` snapshots → the
     GLOBAL bottom-k: (key, priority, n_seen) where ``n_seen`` is the
@@ -588,11 +601,7 @@ def merged_sample(snapshot: DataFrame, k: int) -> DataFrame:
     the k smallest priorities. Batch operator over the drained sink
     table; input is shards × k rows per snapshot — metadata-sized, the
     unpartitioned-window warning is cosmetic."""
-    from pyspark.sql.window import Window as W
-
-    latest = snapshot.withColumn(
-        "__mx", F.max("n_seen").over(W.partitionBy("group"))
-    ).filter(F.col("n_seen") == F.col("__mx"))
+    latest = latest_snapshot(snapshot, "group")
     total = (
         latest.select("group", "n_seen")
         .distinct()

@@ -54,6 +54,7 @@ from bullet_spark_spark.plans.spec import (
     WindowUnit,
 )
 from bullet_spark_spark.plans.compiler import compile_query
+from bullet_spark_spark.sources.streaming import drain
 from bullet_spark_spark.streaming.sinks import MemorySink
 
 
@@ -351,22 +352,38 @@ class EngineRuntime:
         checkpoint_dir: str | None = None,
         timeout_s: float = 120,
     ) -> QueryHandle:
-        """Drain-everything-then-stop variant (Trigger.AvailableNow): used for
-        deterministic tests and bounded backfills. The query never enters
-        ``queries``; metrics() counts it."""
+        """Drain-everything-then-stop variant (Trigger.AvailableNow, run by
+        ``sources.streaming.drain``): used for deterministic tests and
+        bounded backfills. The query never enters ``queries``; metrics()
+        counts it. A drain still running after ``timeout_s`` is stopped,
+        ends FAILED with the timeout as its error, and raises
+        ``TimeoutError``; a failed stream ends FAILED and raises its
+        error."""
         qid = query_id or uuid.uuid4().hex[:12]
         sink = MemorySink()
         handle = QueryHandle(query_id=qid, spec=spec, sink=sink)
         df = compile_query(self.spark, spec, df=stream_df, streaming=True)
-        writer = df.writeStream.outputMode(_output_mode(spec)).foreachBatch(sink)
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
         self._ensure_listener()
-        handle.stream = writer.trigger(availableNow=True).start()
-        self._progress.own.add(str(handle.stream.runId))
         with self._lock:
             self._counts["received"] += 1
-        handle.stream.awaitTermination(timeout_s)
+
+        def started(stream) -> None:
+            handle.stream = stream
+            self._progress.own.add(str(stream.runId))
+
+        try:
+            drain(
+                df,
+                output_mode=_output_mode(spec),
+                foreach_batch=sink,
+                checkpoint_dir=checkpoint_dir,
+                timeout_s=timeout_s,
+                on_start=started,
+            )
+        except Exception as e:
+            handle.error = str(e)[:500]
+            self._finish(handle, QueryState.FAILED)
+            raise
         self._finish(handle, QueryState.COMPLETED)
         return handle
 

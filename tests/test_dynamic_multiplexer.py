@@ -468,3 +468,29 @@ def test_dynamic_approx_count_distinct_hll(spark, tables, tmp_path):
         for r in ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert got_g == expect_g
+
+
+def test_a_drain_that_times_out_fails_and_stops(spark, tables, tmp_path):
+    """An available_now drain still running at its timeout is stopped and
+    raises; every live query ends FAILED with the timeout as its error."""
+    import pytest
+
+    mux = DynamicMultiplexer(spark)
+    handles = [
+        mux.register(
+            qid,
+            Query(
+                source="events",
+                aggregation=GroupAgg(fields=fields, operations=[(AggOp.COUNT, None, "n")]),
+            ),
+        )
+        for qid, fields in (("g", ["event_type"]), ("all", []))
+    ]
+    stream = file_drip(
+        spark, tables["events"], str(tmp_path), chunks=4, max_files_per_trigger=1
+    )
+    with pytest.raises(TimeoutError):
+        mux.start(stream, available_now=True, timeout_s=0.01)
+    assert [h.state for h in handles] == [QueryState.FAILED] * 2
+    assert all("still running after 0.01 s" in h.error for h in handles)
+    assert spark.streams.active == []

@@ -740,3 +740,51 @@ def test_gopher_rules_single_scan_single_agg(spark, qs):
     assert tree.count("Exchange") == 1, tree
     assert "Join" not in tree, tree
     assert "Scan parquet" in tree or "Scan ExistingRDD" in tree, tree
+
+
+def _functions_using(token: str) -> set[tuple[str, str | None]]:
+    """(file, innermost enclosing function) of every line of the package
+    and the entry that contains ``token``."""
+    import ast
+    import glob
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.path.join(root, "__spark_entry__.py")] + sorted(
+        glob.glob(os.path.join(root, "bullet_spark_spark", "**", "*.py"), recursive=True)
+    )
+    found = set()
+    for path in paths:
+        with open(path) as f:
+            src = f.read()
+        if token not in src:
+            continue
+        defs = [
+            (n.lineno, n.end_lineno, n.name)
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for i, line in enumerate(src.splitlines(), 1):
+            if token in line:
+                spans = [d for d in defs if d[0] <= i <= d[1]]
+                name = min(spans, key=lambda d: d[1] - d[0])[2] if spans else None
+                found.add((os.path.relpath(path, root), name))
+    return found
+
+
+def test_every_bounded_stream_run_goes_through_drain():
+    """``sources.streaming.drain`` is the one code that starts a bounded
+    (availableNow) stream and waits for it; the dedup ingest functions
+    start one and hand the running query to their caller. The entry names
+    no stream, so it names no session-global sink."""
+    drain = ("bullet_spark_spark/sources/streaming.py", "drain")
+    ingest = {
+        ("bullet_spark_spark/operators/dedup.py", name)
+        for name in (
+            "streaming_neardup_ingest",
+            "streaming_span_scrub_ingest",
+            "streaming_fuzzy_ingest",
+        )
+    }
+    assert _functions_using("availableNow=True") == {drain} | ingest
+    assert _functions_using("awaitTermination(") == {drain}
+    assert not {f for f, _ in _functions_using(".queryName(")} & {"__spark_entry__.py"}

@@ -600,3 +600,53 @@ def test_lateral_explode_streams_plan_per_query(spark, tables, tmp_path, runtime
         .collect()
     }
     assert final == batch_expected
+
+
+def test_a_drain_that_times_out_fails_and_stops(spark, tables, tmp_path):
+    """A drain still running at its timeout is stopped and raises: its
+    query ends FAILED with the timeout as its error, not COMPLETED over a
+    partial result, and no stream is left running."""
+    rt = EngineRuntime(spark)
+    stream = file_drip(
+        spark, tables["events"], str(tmp_path), chunks=4, max_files_per_trigger=1
+    )
+    spec = Query(
+        source="events",
+        aggregation=GroupAgg(fields=["event_type"], operations=[(AggOp.COUNT, None, "cnt")]),
+    )
+    try:
+        with pytest.raises(TimeoutError):
+            rt.run_available(spec, stream, query_id="slow", timeout_s=0.01)
+        assert [(q, s) for q, s, _t in rt.status_log] == [("slow", Signal.FAIL)]
+        m = rt.metrics()
+        assert m["queries_failed"] == 1 and m["queries_done"] == 0
+        assert spark.streams.active == []
+    finally:
+        rt.stop_all()
+
+
+def test_two_threads_drain_the_same_entry_query(spark, tables):
+    """Two threads running one drain query each get the whole result: a
+    drain's sink is named for its call and dropped after, and the
+    shuffle-partition conf it sizes is restored."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import __spark_entry__ as entry
+    from conftest import SF_DIR
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    query = entry.queries()["streaming_sample_drain"]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    before = views()
+
+    def run(_=None):
+        return sorted(query(spark, SF_DIR).collect())
+
+    want = run()
+    with ThreadPoolExecutor(2) as pool:
+        got = list(pool.map(run, range(2)))
+    assert got == [want, want]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert {v for v in views() - before if v.startswith("__")} == set()
